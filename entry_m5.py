@@ -3030,45 +3030,49 @@ def q_dedup_ingest_lifecycle(
     # the tail of the cluster.
     from concurrent.futures import ThreadPoolExecutor
 
+    from mahout_samsara_book_spark.cache import release
     from mahout_samsara_book_spark.operators.dedup import (
         _shingle_sig_fused,
     )
 
     batches = [b1, b2, b3]
-    _pool = ThreadPoolExecutor(max_workers=3)
-    builds = [
-        _pool.submit(
-            _shingle_sig_fused,
-            b, 3, MINHASH_K, MINHASH_SEED, "doc_id", "text",
-            materialize=True,
-        )
-        for b in batches
-    ]
     outs = []
-    for i, b in enumerate(batches, start=1):
-        # materialize NOW: the next ingest appends more index rows,
-        # which this batch's probe must not see.  The LAST batch is
-        # checkpointed too (ADVICE r11): it makes the returned
-        # DataFrame self-contained, so the NEXT invocation's rmtree of
-        # this working copy can never invalidate a still-unexecuted
-        # result (the build-N+1-before-execute-N hazard).  The
-        # localCheckpoint runs through ingest_batch's `materialize`
-        # hook, OVERLAPPING the probe's jobs with the append's
-        # (guide §2.6) — per-batch wall ≈ max(probe, append), with the
-        # cross-batch sequencing (single-writer) unchanged because
-        # ingest_batch returns only after both finish.
-        sh_b, sig_b = builds[i - 1].result()
-        outs.append(
-            ingest_batch(
-                b, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
-                seed=MINHASH_SEED, threshold=0.5,
-                materialize=lambda df, i=i: df.withColumn(
-                    "batch", F.lit(i).cast("long")
-                ).localCheckpoint(),
-                _sh=sh_b, _sig=sig_b,
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        builds = [
+            pool.submit(
+                _shingle_sig_fused,
+                b, 3, MINHASH_K, MINHASH_SEED, "doc_id", "text",
+                materialize=True,
             )
-        )
-    _pool.shutdown()
+            for b in batches
+        ]
+        for i, b in enumerate(batches, start=1):
+            # materialize NOW: the next ingest appends more index rows,
+            # which this batch's probe must not see.  The LAST batch is
+            # checkpointed too (ADVICE r11): it makes the returned
+            # DataFrame self-contained, so the NEXT invocation's rmtree
+            # of this working copy can never invalidate a
+            # still-unexecuted result (the build-N+1-before-execute-N
+            # hazard).  The localCheckpoint runs through ingest_batch's
+            # `materialize` hook, OVERLAPPING the probe's jobs with the
+            # append's (guide §2.6) — per-batch wall ≈ max(probe,
+            # append), with the cross-batch sequencing (single-writer)
+            # unchanged because ingest_batch returns only after both
+            # finish.  The checkpointed output reads nothing of the
+            # batch's prebuilt pair, so the pair is released after it.
+            sh_b, sig_b = builds[i - 1].result()
+            outs.append(
+                ingest_batch(
+                    b, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
+                    seed=MINHASH_SEED, threshold=0.5,
+                    materialize=lambda df, i=i: df.withColumn(
+                        "batch", F.lit(i).cast("long")
+                    ).localCheckpoint(),
+                    _sh=sh_b, _sig=sig_b,
+                )
+            )
+            release(sh_b)
+            release(sig_b)
     union = outs[0]
     for o in outs[1:]:
         union = union.unionByName(o)

@@ -31,7 +31,8 @@ State layout mirrors the reference: a DRM ``Y = [label, d², features]``
   skip-list optimization; the vectorized ``dist`` kernel computes the
   same result in one BLAS call per block)
 
-Each iteration persists Y (reference checkpoints, ``:46,51,94``).
+Each iteration persists Y (reference checkpoints, ``:46,51,94``) and
+releases the round it superseded once the new one is materialized.
 """
 
 from __future__ import annotations
@@ -131,6 +132,11 @@ def d_sample(
         # lineage recompute)
         prev, y = y, y.map_block(update_y, ncol=n + 2).checkpoint(eager=False)
 
+    if prev is not None:
+        # no φ pass follows the last update: materialize it here so the
+        # last superseded round is released before returning
+        y.checkpoint()
+        prev.unpersist()
     return centers, y
 
 

@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mahout_samsara_book_spark.cache import track
 from mahout_samsara_book_spark.functions.text import term_counts, tfidf
 
 ALPHA_DEFAULT = 1.0
@@ -58,11 +59,7 @@ def train_text_nb(
     per-class sums) — persisted once so the corpus is tokenized once,
     not once per action (Samsara's checkpoint-placement rule, SURVEY §4).
     """
-    from pyspark.storagelevel import StorageLevel
-
-    counts = term_counts(docs, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    counts = track(term_counts(docs, id_col, text_col))
     tf_idf = tfidf(docs, id_col, text_col, counts=counts)
     labeled = tf_idf.join(
         docs.select(id_col, F.col(label_col).alias("label")), id_col
@@ -73,10 +70,8 @@ def train_text_nb(
     # corpus scan without this checkpoint — persisting here is the
     # Samsara cache-placement rule (SURVEY §4) applied at the
     # corpus/model boundary.
-    class_term = (
-        labeled.groupBy("label", "term")
-        .agg(F.sum("tfidf").alias("n_ct"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    class_term = track(
+        labeled.groupBy("label", "term").agg(F.sum("tfidf").alias("n_ct"))
     )
     term_tot = class_term.groupBy("term").agg(F.sum("n_ct").alias("n_t"))
     labels = class_term.select("label").distinct()

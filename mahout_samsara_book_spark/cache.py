@@ -1,51 +1,105 @@
-"""Session-scoped registry of persisted relations (VERDICT r4 item 5).
+"""The one owner of cached intermediates: no other module in the
+package persists, checkpoints or unpersists a DataFrame
+(tests/test_cache_ownership.py guards this).
 
-Several operators persist an intermediate that feeds multiple branches
-of a still-lazy result (e.g. ``containment_dedup``'s shingle relation,
-used by the sizes aggregate AND both sides of the intersection
-self-join). The operator cannot unpersist before returning — the caller
-hasn't materialized anything yet — so in a long-lived session running
-hundreds of queries those cache entries accumulate. ``track`` records
-every such persist; hosts (bench loops, the oracle gate, tests) call
-``release_tracked`` between queries to drop them.
+Samsara has a single materialization primitive, ``drm.checkpoint()``
+(A4). It maps onto two Spark mechanisms, one function each:
 
-Executor-memory note for the 100 TB posture: tracked relations persist
-at MEMORY_AND_DISK, so an oversized intermediate spills rather than
-OOMs, and Spark's LRU block eviction bounds the damage even if a host
-never calls ``release_tracked`` — the registry makes cleanup
-deterministic instead of best-effort.
+- :func:`track` — a lazy MEMORY_AND_DISK ``persist``: the next action
+  fills the cache as a side effect, an oversized intermediate spills
+  instead of OOMing, and a dropped cache recomputes from lineage.
+- :func:`checkpoint` — an eager ``localCheckpoint``: one job now, after
+  which the result's plan is a single leaf.
+
+The rule: use lazy ``track`` when the next consumer is a full pass
+anyway; eagerly checkpoint only where the plan must be truncated —
+loop state whose lineage would otherwise grow by a round per round, or
+a relation many consumers re-analyze (an ``observe()`` metric may ride
+that checkpoint's job).
+
+Both register their result. ``release_tracked`` drops everything
+registered; hosts (bench loops, the oracle gate, tests) call it between
+queries, once a query's result is consumed. ``release`` drops one
+registered relation now: loops release their previous round once the
+next round is materialized, and an operator that executes its own
+result releases what it registered. Ownership follows registration:
+``track`` leaves a plan that is already cached unregistered (Spark's
+CacheManager keys caches by plan, so that cache is its creator's to
+drop), and both release functions ignore unregistered relations.
+
+A released checkpoint cannot be recomputed — Spark raises
+``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` — so nothing may release a
+checkpoint that a still-unexecuted result reads.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _TRACKED: list[DataFrame] = []
+# id(checkpoint result) -> the JVM RDD holding its blocks: unpersisting
+# the DataFrame itself is a no-op, it is not in the CacheManager
+_CHECKPOINT_RDDS: dict[int, object] = {}
+# prebuild pools register from worker threads
+_LOCK = threading.Lock()
 
 
 def track(df: DataFrame) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK) and register it for release."""
+    """Lazily persist ``df`` (MEMORY_AND_DISK) and register it for
+    release. A plan that is already cached is returned unregistered."""
+    lvl = df.storageLevel
+    if lvl.useMemory or lvl.useDisk:
+        return df
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    _TRACKED.append(df)
+    with _LOCK:
+        _TRACKED.append(df)
     return df
 
 
-def release_tracked(blocking: bool = False) -> int:
-    """Unpersist every tracked relation; returns how many were dropped.
-    Safe to call at any time — lazily-defined results recompute from
-    lineage if re-executed afterward. ``blocking=True`` waits for block
-    removal (tests assert on cache counts; production hosts keep the
-    async default)."""
-    n = 0
-    while _TRACKED:
-        df = _TRACKED.pop()
-        try:
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly ``localCheckpoint`` ``df`` and register the result."""
+    ck = df.localCheckpoint(eager=True)
+    rdd = ck._jdf.logicalPlan().rdd()
+    with _LOCK:
+        _TRACKED.append(ck)
+        _CHECKPOINT_RDDS[id(ck)] = rdd
+    return ck
+
+
+def _drop(df: DataFrame, blocking: bool) -> bool:
+    with _LOCK:
+        rdd = _CHECKPOINT_RDDS.pop(id(df), None)
+    try:
+        if rdd is None:
             df.unpersist(blocking=blocking)
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
+        else:
+            rdd.unpersist(blocking)
+        return True
+    except Exception:  # session already stopped — nothing to free
+        return False
+
+
+def release(df: DataFrame) -> None:
+    """Drop one registered relation now; a no-op for any other."""
+    with _LOCK:
+        i = next((i for i, t in enumerate(_TRACKED) if t is df), None)
+        if i is None:
+            return
+        del _TRACKED[i]
+    _drop(df, blocking=False)
+
+
+def release_tracked(blocking: bool = False) -> int:
+    """Drop every registered relation; returns how many were dropped.
+    ``blocking=True`` waits for block removal (tests assert on cache
+    counts; production hosts keep the async default)."""
+    with _LOCK:
+        tracked = _TRACKED[::-1]
+        _TRACKED.clear()
+    return sum(_drop(df, blocking) for df in tracked)
 
 
 # (semanticHash, Catalyst size estimate, leaf-file fingerprint) →

@@ -33,7 +33,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from mahout_samsara_book_spark.cache import release, track
 
 KEY = "row_id"
 FEAT = "features"
@@ -69,6 +70,31 @@ def _pdf_to_block(pdf: pd.DataFrame, ncol: int) -> tuple[np.ndarray, np.ndarray]
     return keys, block
 
 
+def _partial_pdf(pid: int, partial) -> pd.DataFrame:
+    """One partition's ``allreduce_block`` partial as rows. A zero-row
+    partial becomes one ``ridx = -1`` row carrying its width, so the
+    reduce can tell a ``map_fn`` that returned nothing from a DRM that
+    has no rows."""
+    partial = np.asarray(partial, dtype=np.float64)
+    if partial.ndim == 1:
+        partial = partial[None, :]
+    if partial.shape[0] == 0:
+        return pd.DataFrame(
+            {
+                "pid": [pid],
+                "ridx": [-1],
+                FEAT: pd.Series([[0.0] * partial.shape[1]], dtype=object),
+            }
+        )
+    return pd.DataFrame(
+        {
+            "pid": pid,
+            "ridx": np.arange(partial.shape[0]),
+            FEAT: pd.Series([r.tolist() for r in partial], dtype=object),
+        }
+    )
+
+
 def drm_broadcast(spark: SparkSession, value: np.ndarray):
     """``drmBroadcast(v)`` — ship an in-core vector/matrix to all tasks
     (TWCNB.scala:118,135; BahmaniSketch.scala:104). Thin wrapper so user
@@ -89,7 +115,6 @@ class Drm:
         self.ncol = int(ncol)
         self._nrow = nrow
         self._transpose_of: Drm | None = None
-        self._persisted = False
 
     # ------------------------------------------------------------------ #
     # sources / sinks
@@ -201,18 +226,17 @@ class Drm:
         ``eager=False`` registers the cache but lets the NEXT action
         materialize it — iterative loops whose first per-round action is
         itself a full pass (Bahmani's φ column-sum) save one complete
-        scan per round by folding materialization into that action."""
-        if not self._persisted:
-            self.df = self.df.persist(StorageLevel.MEMORY_AND_DISK)
-            self._persisted = True
+        scan per round by folding materialization into that action.
+
+        The cache is :func:`cache.track`-ed (see the rule in cache.py):
+        ``unpersist`` or the host's ``release_tracked`` drops it."""
+        self.df = track(self.df)
         if eager:
             self._nrow = self.df.count()
         return self
 
     def unpersist(self) -> Drm:
-        if self._persisted:
-            self.df.unpersist()
-            self._persisted = False
+        release(self.df)
         return self
 
     # ------------------------------------------------------------------ #
@@ -297,7 +321,7 @@ class Drm:
             .sortWithinPartitions(*order)
             .withColumn("_pid", F.spark_partition_id())
         )
-        sorted_df = sorted_df.persist(StorageLevel.MEMORY_AND_DISK)
+        sorted_df = track(sorted_df)
         counts = {
             r["_pid"]: r["cnt"]
             for r in sorted_df.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
@@ -960,7 +984,11 @@ class Drm:
         ``flavor='sparse'`` hands ``map_fn`` a CSR block built from the
         zero-pruned COO view (same contract as :meth:`map_block`): the
         wide-TF-IDF partial (e.g. per-class colsums) then costs O(nnz)
-        worker memory instead of b×ncol."""
+        worker memory instead of b×ncol.
+
+        A DRM with no rows raises ``ValueError``; one whose every
+        ``map_fn`` call returns zero rows (a sampling round that drew
+        nothing) returns a zero-row matrix of ``map_fn``'s width."""
         in_ncol = self.ncol
 
         def op(batches):
@@ -977,18 +1005,7 @@ class Drm:
                 return
             keys = np.concatenate(chunks_k)
             block = np.vstack(chunks_b)
-            partial = np.asarray(map_fn(keys, block), dtype=np.float64)
-            if partial.ndim == 1:
-                partial = partial[None, :]
-            if partial.shape[0] == 0:
-                return
-            yield pd.DataFrame(
-                {
-                    "pid": pid,
-                    "ridx": np.arange(partial.shape[0]),
-                    FEAT: pd.Series([r.tolist() for r in partial], dtype=object),
-                }
-            )
+            yield _partial_pdf(pid, map_fn(keys, block))
 
         def op_sparse(batches):
             from pyspark import TaskContext
@@ -1009,18 +1026,7 @@ class Drm:
             csr = CsrMatrix.from_coo(
                 local, np.concatenate(cs), np.concatenate(vs), (len(keys), in_ncol)
             )
-            partial = np.asarray(map_fn(keys, csr), dtype=np.float64)
-            if partial.ndim == 1:
-                partial = partial[None, :]
-            if partial.shape[0] == 0:
-                return
-            yield pd.DataFrame(
-                {
-                    "pid": pid,
-                    "ridx": np.arange(partial.shape[0]),
-                    FEAT: pd.Series([r_.tolist() for r_ in partial], dtype=object),
-                }
-            )
+            yield _partial_pdf(pid, map_fn(keys, csr))
 
         src = self.to_coo() if flavor == "sparse" else self.df
         pdf = src.mapInPandas(
@@ -1029,6 +1035,10 @@ class Drm:
         ).toPandas()
         if len(pdf) == 0:
             raise ValueError("allreduce_block over an empty DRM")
+        empty = pdf["ridx"] < 0
+        if empty.all():  # rows, but every map_fn returned none
+            return np.zeros((0, len(pdf[FEAT].iloc[0])), dtype=np.float64)
+        pdf = pdf[~empty]
         partials = []
         for _, grp in pdf.sort_values(["pid", "ridx"]).groupby("pid", sort=True):
             partials.append(np.array(grp[FEAT].tolist(), dtype=np.float64))

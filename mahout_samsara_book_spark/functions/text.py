@@ -467,7 +467,7 @@ def bpe_merges(
     bit-identical to the corpus-state rewrite (replaces cannot span the
     barrier that separated words there), so the merge sequence, the
     counts, and the oracle's corpus-wide replay are all unchanged."""
-    from mahout_samsara_book_spark.cache import track
+    from mahout_samsara_book_spark.cache import release, track
 
     if level not in ("word", "char"):
         raise ValueError(f"level must be 'word' or 'char', got {level!r}")
@@ -522,11 +522,11 @@ def bpe_merges(
             .limit(1)
             .collect()
         )
+        if prev is not None:  # superseded state: the count above
+            release(prev)  # materialized the current one
+        prev = state
         if not top:  # corpus exhausted below k merges
             break
-        if prev is not None:  # superseded state: the count above
-            prev.unpersist()  # materialized the current one
-        prev = state
         a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
         rules.append((i + 1, a, b, a + b, n))
         state = state.select(
@@ -535,6 +535,8 @@ def bpe_merges(
             ).alias("s"),
             "freq",
         )
+    if prev is not None:  # the rules are collected: nothing reads it
+        release(prev)
     return spark.createDataFrame(
         rules,
         "merge_rank long, tok_a string, tok_b string, "

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mahout_samsara_book_spark.cache import track
+from mahout_samsara_book_spark.cache import checkpoint, release, track
 
 from mahout_samsara_book_spark.functions.text import tokenize
 from mahout_samsara_book_spark.operators.similarity import ensure_min_partitions
@@ -192,7 +192,7 @@ def _shingle_sig_fused(
         # it materializes inside the first consumer's job (the probe's
         # candidate build) rather than costing its own serial job on
         # the ingest chain
-        sh = sh.localCheckpoint(eager=True)
+        sh = checkpoint(sh)
         return sh, track(minhash_signatures(sh, k, seed, id_col))
     return sh, minhash_signatures(sh, k, seed, id_col)
 
@@ -671,19 +671,18 @@ def dup_clusters(
         if small_graph_max_edges is None
         else small_graph_max_edges
     )
-    edges0 = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).persist()
-    n_edges = edges0.count()
-    if n_edges <= limit:
-        out = _clusters_unionfind(edges0)
-        edges0.unpersist()
-        return out
-    out = connected_components_lsls(
-        edges0, a_col="src", b_col="dst", max_iter=max_iter
+    edges0 = track(
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     )
-    edges0.unpersist()
-    return out
+    try:
+        if edges0.count() <= limit:
+            return _clusters_unionfind(edges0)
+        # reads edges0 only through its own eager checkpoint
+        return connected_components_lsls(
+            edges0, a_col="src", b_col="dst", max_iter=max_iter
+        )
+    finally:
+        release(edges0)
 
 
 # Edge graphs at or below this ride the driver union-find fast path
@@ -779,7 +778,7 @@ def incremental_dedup(
     bkt_b = band_buckets(sig_b, bands, rows, id_col)
     return _incremental_match(
         batch, bkt_c, bkt_b, sh_c, sh_b, threshold, id_col
-    )
+    )[0]
 
 
 # candidate-pair count at or below which the incremental verify's
@@ -802,11 +801,13 @@ def _incremental_match(
     sh_b: DataFrame,
     threshold: float,
     id_col: str,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Shared match core of :func:`incremental_dedup` /
     :func:`incremental_dedup_persisted`: probe batch bucket keys against
     corpus ∪ earlier-batch buckets, Jaccard-verify candidates, pick the
-    best match per batch doc."""
+    best match per batch doc.  Returns the lazy result and the
+    registered candidate relation it reads, for a caller that executes
+    the result to release."""
     newer = bkt_b.select(F.col(id_col).alias("doc_b"), "band", "sig")
     # corpus docs are ALWAYS the "existing" side regardless of id order;
     # batch-batch pairs defer to the earlier (smaller) id.
@@ -851,9 +852,8 @@ def _incremental_match(
         n_cand = 0
     else:
         obs = Observation()
-        cand = (
+        cand = checkpoint(
             cand_lazy.observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_cand = int(obs.get["n"])
     sh_all = sh_c.unionByName(sh_b)
@@ -879,7 +879,7 @@ def _incremental_match(
     # BroadcastHashJoin LeftOuter, so the batch side is never shuffled
     # or sorted for it (guide §3.1; was SortMergeJoin + an Exchange +
     # Sort of the batch relation).  The big/index side was never here.
-    return batch.select(id_col).join(
+    out = batch.select(id_col).join(
         F.broadcast(best), id_col, "left"
     ).select(
         id_col,
@@ -887,6 +887,7 @@ def _incremental_match(
         "dup_of",
         "jaccard",
     )
+    return out, cand
 
 
 def dedup_index_persist(
@@ -937,14 +938,25 @@ def dedup_index_persist(
             path + "/buckets"
         )
 
+    try:
+        _write_both(_write_shingles, _write_buckets)
+    finally:
+        release(sh_c)
+    _manifest_commit(corpus.sparkSession, path, INDEX_CORPUS_BATCH)
+
+
+def _write_both(write_a, write_b) -> None:
+    """Run two independent index writes as concurrent Spark jobs
+    (guide §2.6: one job's task tail back-fills the other's idle
+    cores) and wait for both.  The pool is scoped, so when one
+    write raises, the other still finishes before the error
+    propagates."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fs = pool.submit(_write_shingles)
-        fb = pool.submit(_write_buckets)
-        fs.result()
+        fa, fb = pool.submit(write_a), pool.submit(write_b)
+        fa.result()
         fb.result()
-    _manifest_commit(corpus.sparkSession, path, INDEX_CORPUS_BATCH)
 
 
 # reserved batch_id of the initial corpus build (dedup_index_persist)
@@ -1176,14 +1188,7 @@ def dedup_index_compact(spark, path: str, bands: int = 8) -> str:
 
     # the two generation rewrites are independent jobs over disjoint
     # tables and both invisible until the manifest swap — overlap them
-    # (guide §2.6), same discipline as dedup_index_append's writes
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fb = pool.submit(_rewrite_buckets)
-        fs = pool.submit(_rewrite_shingles)
-        fb.result()
-        fs.result()
+    _write_both(_rewrite_buckets, _rewrite_shingles)
     # driver-side metadata write (atomic temp+rename), mirroring
     # _manifest_commit — the one-row manifest_next needs no Spark job
     if "://" not in man_next:
@@ -1328,19 +1333,11 @@ def dedup_index_append(
     else:
         # The two data writes are INDEPENDENT jobs over the shared
         # cached batch relations, and neither is visible to probes
-        # until the manifest row lands — so they overlap (guide §2.6:
-        # submit independent jobs from driver threads so one job's
-        # task tail back-fills the other's idle cores).  Write order
+        # until the manifest row lands — so they overlap.  Write order
         # stopped being a safety property when the manifest became
         # the commit marker (VERDICT r11 item 3): any interleaving of
         # a crash leaves the batch invisible-by-manifest.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb = pool.submit(_write_buckets)
-            fs = pool.submit(_write_shingles)
-            fb.result()
-            fs.result()
+        _write_both(_write_buckets, _write_shingles)
     _manifest_commit(batch.sparkSession, path, batch_id)
     return batch_id
 
@@ -1427,40 +1424,53 @@ def ingest_batch(
         sh_b, sig_b = _shingle_sig_fused(
             batch, n, k, seed, id_col, text_col, materialize=True
         )
-    else:
+        owned = [sh_b, sig_b]
+    else:  # a caller's prebuilt pair stays the caller's to release
         sh_b, sig_b = _sh, _sig
-    out = incremental_dedup_persisted(
-        batch, path, n=n, k=k, bands=bands, seed=seed,
-        threshold=threshold, id_col=id_col, text_col=text_col,
-        _sh=sh_b, _sig=sig_b,
+        owned = []
+    out, cand = _persisted_match(
+        batch, path, sh_b, sig_b, bands, k // bands, threshold, id_col
     )
-    if skip_if_committed and batch_id is not None:
-        # driver-side metadata read (manifest_batch_ids) — the previous
-        # limit(1).count() ran a Spark job per re-delivery check
-        if batch_id in manifest_batch_ids(batch.sparkSession, path):
-            return materialize(out) if materialize is not None else out
-    if materialize is None:
-        dedup_index_append(
-            batch, path, n=n, k=k, bands=bands, seed=seed,
-            id_col=id_col, text_col=text_col, batch_id=batch_id,
-            _sh=sh_b, _sig=sig_b,
-        )
-        return out
-    # overlap the probe's materialization with the append (see
-    # docstring); the probe's committed-id set was bound driver-side
-    # when the plan was built above, and the append's rows stay
-    # invisible behind the manifest until after both writes — either
-    # completion order computes the identical snapshot answer.
-    from concurrent.futures import ThreadPoolExecutor
+    owned.append(cand)
+    # driver-side metadata read (manifest_batch_ids) — the previous
+    # limit(1).count() ran a Spark job per re-delivery check
+    committed = (
+        skip_if_committed
+        and batch_id is not None
+        and batch_id in manifest_batch_ids(batch.sparkSession, path)
+    )
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(materialize, out)
+    def append() -> None:
         dedup_index_append(
             batch, path, n=n, k=k, bands=bands, seed=seed,
             id_col=id_col, text_col=text_col, batch_id=batch_id,
             _sh=sh_b, _sig=sig_b,
         )
-    return fut.result()
+
+    if materialize is None:
+        if not committed:
+            append()
+        return out
+    # `materialize` executes the probe, so nothing reads what this call
+    # registered once it returns: release it on every exit path
+    try:
+        if committed:
+            return materialize(out)
+        # overlap the probe's materialization with the append (see
+        # docstring); the probe's committed-id set was bound
+        # driver-side when the plan was built above, and the append's
+        # rows stay invisible behind the manifest until after both
+        # writes — either completion order computes the identical
+        # snapshot answer.
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fut = pool.submit(materialize, out)
+            append()
+        return fut.result()
+    finally:
+        for df in owned:
+            release(df)
 
 
 def incremental_dedup_persisted(
@@ -1473,8 +1483,6 @@ def incremental_dedup_persisted(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    _sh: DataFrame | None = None,
-    _sig: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`incremental_dedup` against a PERSISTED index (see
     :func:`dedup_index_persist`): only the BATCH is shingled/minhashed;
@@ -1483,26 +1491,33 @@ def incremental_dedup_persisted(
     identical to the in-session build with the same parameters (the
     index content is deterministic), so the two share an oracle.
 
-    Callers that already hold the batch's shingle/signature relations
-    (:func:`ingest_batch`, where probe AND append consume them) pass
-    them via ``_sh``/``_sig`` so the batch text is tokenized once per
-    ingest.  A standalone probe keeps the lazy recompute: measured at
+    :func:`ingest_batch`, where probe AND append consume the batch's
+    shingle/signature relations, builds them once and calls the match
+    directly.  A standalone probe keeps the lazy recompute: measured at
     sf0.1, persisting here ADDS wall time (two extra cache
     materialization barriers against ~0.3 s of saved recompute that
     Catalyst otherwise pipelines into branches that run anyway)."""
-    spark = batch.sparkSession
-    rows = k // bands
-    if _sh is None or _sig is None:
-        # standalone probe: fused build (one hash(id) exchange for
-        # shingles + signatures, see _shingle_sig_fused); ingest_batch
-        # passes its own tracked pair in instead
-        _fsh, _fsig = _shingle_sig_fused(
-            batch, n, k, seed, id_col, text_col
-        )
-        sh_b = _fsh if _sh is None else _sh
-        sig_b = _fsig if _sig is None else _sig
-    else:
-        sh_b, sig_b = _sh, _sig
+    # fused build: one hash(id) exchange for shingles + signatures (see
+    # _shingle_sig_fused)
+    sh_b, sig_b = _shingle_sig_fused(batch, n, k, seed, id_col, text_col)
+    return _persisted_match(
+        batch, path, sh_b, sig_b, bands, k // bands, threshold, id_col
+    )[0]
+
+
+def _persisted_match(
+    batch: DataFrame,
+    path: str,
+    sh_b: DataFrame,
+    sig_b: DataFrame,
+    bands: int,
+    rows: int,
+    threshold: float,
+    id_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The probe of :func:`incremental_dedup_persisted` over the batch's
+    shingle/signature relations; returns what :func:`_incremental_match`
+    returns."""
     bkt_b = band_buckets(sig_b, bands, rows, id_col)
     # COMMITTED rows only (manifest semi-join, VERDICT r11 item 3) —
     # a crashed append's orphan rows never reach the probe.  Beyond
@@ -1514,7 +1529,7 @@ def incremental_dedup_persisted(
     # ingest contract, so a broadcast anti-join on the batch's ids
     # strips exactly the self-rows and nothing else.
     own = F.broadcast(batch.select(id_col).distinct())
-    bkt_all, sh_all = committed_index_tables(spark, path, id_col)
+    bkt_all, sh_all = committed_index_tables(batch.sparkSession, path, id_col)
     bkt_c = bkt_all.join(own, id_col, "left_anti")
     sh_c = sh_all.join(own, id_col, "left_anti")
     return _incremental_match(
@@ -1574,13 +1589,13 @@ def connected_components_lsls(
     # wrong early stop.
     def _ckpt_with_summary(df: DataFrame) -> tuple[DataFrame, tuple]:
         obs = Observation()
-        ck = df.observe(
+        ck = checkpoint(df.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
                 F.bit_xor(F.xxhash64("u", "v")), F.lit(0)
             ).alias("x"),
-        ).localCheckpoint(eager=True)
+        ))
         m = obs.get
         return ck, (m["n"], m["x"])
 
@@ -1592,9 +1607,7 @@ def connected_components_lsls(
     # Post-LSH pair graphs are orders of magnitude smaller than the
     # corpus (the premise of this whole operator), so the checkpoint
     # is edge-sized.
-    pairs0 = pairs.select(F.col(a_col), F.col(b_col)).localCheckpoint(
-        eager=True
-    )
+    pairs0 = checkpoint(pairs.select(F.col(a_col), F.col(b_col)))
     edges, e_sum = _ckpt_with_summary(
         pairs0.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -1672,6 +1685,7 @@ def connected_components_lsls(
                 .limit(1)
                 .count()
             )
+        release(edges)  # superseded by the materialized ss
         edges, e_sum = ss, s_sum
         if delta == 0:
             break

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mahout_samsara_book_spark.cache import track
+from mahout_samsara_book_spark.cache import checkpoint, release, track
 
 
 def transition_edges(
@@ -107,6 +107,7 @@ def pagerank(
     n_d = F.lit(float(n_nodes))
     base = F.lit(1.0 - damping) / n_d
     r = nodes.select("node", (F.lit(1.0) / n_d).alias("pr"))
+    prev = None
     for _ in range(iters):
         # materialize the rank relation ONCE per iteration: it is
         # referenced twice below (contribs + dangling), and without a
@@ -114,8 +115,12 @@ def pagerank(
         # 2^iters recomputations of the whole chain (measured 8.4s for
         # 5 iterations on a 5-node graph; ~1s with the cut). This is
         # SURVEY §4's iterative-checkpoint rule (Bahmani's loop does
-        # the same); one O(|nodes|) job per iteration.
-        r = r.localCheckpoint(eager=True)
+        # the same); one O(|nodes|) job per iteration, after which the
+        # previous round's ranks are read by nothing.
+        r = checkpoint(r)
+        if prev is not None:
+            release(prev)
+        prev = r
         contribs = probs.join(
             F.broadcast(r), probs.src == r.node
         ).select("dst", "src", (F.col("p") * F.col("pr")).alias("c"))
@@ -391,10 +396,10 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
 
     def _ckpt_with_frontier(deg_df: DataFrame) -> tuple[DataFrame, int]:
         obs = Observation()
-        ck = deg_df.observe(
+        ck = checkpoint(deg_df.observe(
             obs,
             F.count(F.when(F.col("deg") < F.lit(int(k)), 1)).alias("f"),
-        ).localCheckpoint(eager=True)
+        ))
         return ck, int(obs.get["f"])
 
     # Lazily CACHE the caller's edge relation instead of letting both
@@ -405,11 +410,10 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     # the edge build executed twice, 2.7 s + 1.7 s; cached it runs
     # once inside the degree job — degrees() scans every partition, so
     # the cache is fully populated as a side effect, no extra job).
-    from pyspark import StorageLevel
-
-    e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    e0 = e
-    prev_marked: DataFrame | None = None
+    # A caller that cached `edges` itself keeps that cache: track()
+    # leaves it unregistered, so the release below cannot drop it.
+    e = track(edges)
+    prev_marked = e
     deg, n_removed = _ckpt_with_frontier(degrees(e))
     for _ in range(rounds):
         if n_removed == 0:
@@ -437,7 +441,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
         # survivor filter reads the populated cache; the block manager
         # computes each partition exactly once even with concurrent
         # consumers.
-        marked = (
+        marked = track(
             e.join(ra, "a", "left")
             .join(rb, "b", "left")
             .select(
@@ -446,7 +450,6 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
                 F.coalesce("_ra", F.lit(False)).alias("_ra"),
                 F.coalesce("_rb", F.lit(False)).alias("_rb"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         e = marked.filter(~F.col("_ra") & ~F.col("_rb")).select("a", "b")
         loss = (
@@ -459,6 +462,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
             .groupBy("node")
             .agg(F.count("*").alias("_lost"))
         )
+        prev_deg = deg
         deg, n_removed = _ckpt_with_frontier(
             deg.filter(F.col("deg") >= F.lit(int(k)))
             .join(loss, "node", "left")
@@ -470,22 +474,16 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
             )
         )
         # the deg job above materialized this round's marked cache;
-        # the previous round's (and after round 0, the caller's edge
-        # cache) have served every consumer — release them so the
-        # loop's storage footprint stays one edge relation
-        if prev_marked is not None:
-            prev_marked.unpersist()
-        elif e0 is not None:
-            e0.unpersist()
-            e0 = None
+        # the previous round's (in round 0, the edge cache) and the
+        # previous degrees have served every consumer — release them
+        # so the loop's storage footprint stays one round
+        release(prev_marked)
+        release(prev_deg)
         prev_marked = marked
     # the maintained relation equals degrees(e) except it also carries
     # survivors peeled down to zero remaining edges — degrees() never
     # lists those, so drop them for the identical contract.  The
     # returned relation is checkpoint-backed, so the loop's remaining
-    # caches can be dropped.
-    if prev_marked is not None:
-        prev_marked.unpersist()
-    if e0 is not None:
-        e0.unpersist()
+    # cache can be dropped.
+    release(prev_marked)
     return deg.filter(F.col("deg") > 0)

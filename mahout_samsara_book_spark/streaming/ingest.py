@@ -24,15 +24,20 @@ ingest rate = batch size / (probe+append wall) — the SCALING.md
 
 from __future__ import annotations
 
+import glob
+import os
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 
-from mahout_samsara_book_spark.operators.dedup import ingest_batch
+from mahout_samsara_book_spark.cache import release
+from mahout_samsara_book_spark.operators.dedup import (
+    _shingle_sig_fused,
+    ingest_batch,
+    manifest_batch_ids,
+)
 
 DOCS_SCHEMA = "doc_id long, text string"
-
-# A/B gate for the staged-file prebuild (round-13); shipping value
-# decided by interleaved measurement — see OPTIMIZATION_r13.md
-PREBUILD = True
 
 
 def run_stream_ingest(
@@ -73,7 +78,7 @@ def run_stream_ingest(
         .parquet(batches_dir)
     )
 
-    # PREBUILD each staged file's fused shingle/signature relations
+    # Prebuild each staged file's fused shingle/signature relations
     # concurrently before the stream starts (round-13, guide §2.6 —
     # the lifecycle row's same overlap): the build depends only on the
     # file's text, never on the index, so it is legal to run ahead of
@@ -82,39 +87,10 @@ def run_stream_ingest(
     # and looked up through ``bdf.inputFiles()`` inside the sink, so a
     # batch that is not exactly one known staged file just builds
     # inline — the mapping is verified per epoch, never assumed.
-    import glob as _glob
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    from mahout_samsara_book_spark.operators.dedup import (
-        _shingle_sig_fused,
-    )
-
-    _staged = (
-        sorted(
-            _glob.glob(batches_dir + "/*.parquet"),
-            key=_os.path.getmtime,
-        )
-        if PREBUILD
-        else []
-    )
-    _pool = _TPE(max_workers=min(4, max(1, len(_staged))))
-    _prebuilds = {
-        _os.path.basename(f): _pool.submit(
-            _shingle_sig_fused,
-            spark.read.parquet(f).select("doc_id", "text"),
-            n, k, seed, "doc_id", "text", materialize=True,
-        )
-        for f in _staged
-    }
+    # Prebuilds read with the stream's own schema, not an inferred one.
+    staged = sorted(glob.glob(batches_dir + "/*.parquet"), key=os.path.getmtime)
 
     def sink(bdf: DataFrame, epoch_id: int) -> None:
-        import os
-
-        from mahout_samsara_book_spark.operators.dedup import (
-            manifest_batch_ids,
-        )
-
         if bdf.isEmpty():  # trailing empty micro-batch — nothing to ingest
             return
         bid = f"epoch-{int(epoch_id)}"
@@ -147,28 +123,50 @@ def run_stream_ingest(
         kw = {}
         in_files = bdf.inputFiles()
         if len(in_files) == 1:
-            fut = _prebuilds.get(os.path.basename(in_files[0]))
+            fut = prebuilds.get(os.path.basename(in_files[0]))
             if fut is not None:
                 kw["_sh"], kw["_sig"] = fut.result()
-        ingest_batch(
-            bdf.select("doc_id", "text"), index_path,
-            n=n, k=k, bands=bands, seed=seed, threshold=threshold,
-            batch_id=bid, skip_if_committed=True,
-            materialize=lambda df: df.write.mode("overwrite").parquet(
-                dst
-            ),
-            **kw,
-        )
+        try:
+            ingest_batch(
+                bdf.select("doc_id", "text"), index_path,
+                n=n, k=k, bands=bands, seed=seed, threshold=threshold,
+                batch_id=bid, skip_if_committed=True,
+                materialize=lambda df: df.write.mode("overwrite").parquet(
+                    dst
+                ),
+                **kw,
+            )
+        finally:  # the output is written: this epoch's pair is spent
+            for df in kw.values():
+                release(df)
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:  # pragma: no cover — availableNow self-terminates
-            q.stop()
-        _pool.shutdown(wait=False)
+    with ThreadPoolExecutor(max_workers=min(4, max(1, len(staged)))) as pool:
+        prebuilds = {
+            os.path.basename(f): pool.submit(
+                _shingle_sig_fused,
+                spark.read.schema(DOCS_SCHEMA).parquet(f),
+                n, k, seed, "doc_id", "text", materialize=True,
+            )
+            for f in staged
+        }
+        try:
+            q = (
+                src.writeStream.foreachBatch(sink)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+            finally:
+                if q.isActive:  # pragma: no cover — availableNow self-terminates
+                    q.stop()
+        finally:
+            # on every exit: cancel the prebuilds that have not
+            # started, wait for the running ones, and release each
+            # finished pair the sink did not consume
+            pool.shutdown(cancel_futures=True)
+            for fut in prebuilds.values():
+                if not fut.cancelled() and fut.exception() is None:
+                    for df in fut.result():
+                        release(df)
     return spark.read.parquet(out_path)
