@@ -2,13 +2,13 @@
 
 Two execution shapes:
 
-- **Distributed, fully relational** (:func:`train_text_nb`,
-  :func:`score_text_nb`): the entire TWCNB train + score pipeline as
-  DataFrame ops over ``(label, term, value)`` triplets — tokenize → TF-IDF
-  → per-class sums → complement/smooth/log/normalize → score join →
-  per-doc argmin. No driver-side matrix at any point, so vocabulary and
-  corpus both scale out (unlike the reference, which assembles the model
-  in-core — ``TWCNB.scala:28-148``). Every stage is SQL-checkable.
+- **Distributed corpus pass, in-core model** (:func:`train_text_nb`,
+  :func:`score_text_nb`): training aggregates the corpus in one Spark
+  plan — per-(label, term) Σ√tf, per-term df, corpus size — collects
+  that, and finishes the label × vocab model in numpy, as the reference
+  does (``TWCNB.scala:28-148``). Driver memory is the dense C×V matrix
+  the serving model holds anyway. Scoring stays relational: TF-IDF
+  triplets joined against the broadcast weights, per-doc argmin.
 
 - **Serving-side, driver-local** (:class:`NBServingModel`): the
   reference's request/response classify path
@@ -28,11 +28,13 @@ import re
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from mahout_samsara_book_spark.cache import track
-from mahout_samsara_book_spark.functions.text import term_counts, tfidf
+from mahout_samsara_book_spark.functions.text import doc_frequencies, term_counts
 
 ALPHA_DEFAULT = 1.0
 
@@ -53,60 +55,64 @@ def train_text_nb(
 
     comp(c,t) = Σ_t' n(t) − n(c,t) over the FULL label × vocab grid
     (absent terms contribute n(t)); θ = ln((comp+α)/(Σ_t comp + α·V));
-    w = θ / Σ_t |θ| per class — TWCNB.scala:109-147 relationally.
+    w = θ / Σ_t |θ| per class — TWCNB.scala:109-147.
 
-    The token-count relation feeds several actions (vocab count, TF-IDF,
-    per-class sums) — persisted once so the corpus is tokenized once,
-    not once per action (Samsara's checkpoint-placement rule, SURVEY §4).
+    The corpus is aggregated once: one plan, one collect of the
+    per-(label, term) Σ√tf, each term's df and the corpus size N.
+    idf depends only on the term, so n(c,t) = idf(t)·Σ√tf, and the
+    label × vocab finish runs in numpy on the dense C×V matrix — the
+    same matrix :meth:`NBServingModel.from_dataframes` builds for
+    serving. ``label`` keeps the type of ``docs[label_col]``.
+
+    The token-count relation is persisted: later dictionary, df and
+    scoring calls over the same ``docs`` re-read it instead of
+    re-tokenizing the corpus.
     """
     counts = track(term_counts(docs, id_col, text_col))
-    tf_idf = tfidf(docs, id_col, text_col, counts=counts)
-    labeled = tf_idf.join(
-        docs.select(id_col, F.col(label_col).alias("label")), id_col
+    class_term = (
+        counts.join(docs.select(id_col, F.col(label_col).alias("label")), id_col)
+        .groupBy("label", "term")
+        .agg(F.sum(F.sqrt(F.col("tf"))).alias("s"))
     )
-    # class_term is the LAST corpus-sized computation; everything below
-    # is label×vocab-sized. Five downstream broadcast subtrees (labels,
-    # vocab, denom, z, and the final join input) would each re-run the
-    # corpus scan without this checkpoint — persisting here is the
-    # Samsara cache-placement rule (SURVEY §4) applied at the
-    # corpus/model boundary.
-    class_term = track(
-        labeled.groupBy("label", "term").agg(F.sum("tfidf").alias("n_ct"))
+    # N counts every distinct doc id, so a doc with no tokens still counts
+    n_df = docs.select(id_col).distinct().agg(F.count("*").alias("n"))
+    rows = (
+        class_term.join(F.broadcast(doc_frequencies(counts, id_col)), "term")
+        .crossJoin(F.broadcast(n_df))
+        .collect()
     )
-    term_tot = class_term.groupBy("term").agg(F.sum("n_ct").alias("n_t"))
-    labels = class_term.select("label").distinct()
-    # vocabulary size as a broadcast scalar subquery, NOT an eager
-    # count(): keeps train a single job instead of a count-then-build
-    # driver round-trip (at scale, one fewer full pass over the corpus)
-    vocab = term_tot.agg(F.count("*").alias("_v"))
-    # full grid: labels × vocab (labels are few — broadcast)
-    grid = term_tot.crossJoin(F.broadcast(labels))
-    comp = (
-        grid.join(class_term, ["label", "term"], "left")
-        .select(
-            "label",
-            "term",
-            (F.col("n_t") - F.coalesce(F.col("n_ct"), F.lit(0.0))).alias("comp"),
-        )
+    labels = list(dict.fromkeys(r["label"] for r in rows))
+    terms = list(dict.fromkeys(r["term"] for r in rows))
+    li = {lab: i for i, lab in enumerate(labels)}
+    ti = {t: j for j, t in enumerate(terms)}
+    n_v = len(terms)
+    s = np.zeros((len(labels), n_v))
+    df = np.zeros(n_v)
+    for r in rows:
+        s[li[r["label"]], ti[r["term"]]] = r["s"]
+        df[ti[r["term"]]] = r["df"]
+    n_docs = float(rows[0]["n"]) if rows else 0.0
+    n_ct = s * (np.log(n_docs / (df + 1.0)) + 1.0)
+    comp = n_ct.sum(axis=0) - n_ct
+    theta = np.log((comp + alpha) / (comp.sum(axis=1, keepdims=True) + alpha * n_v))
+    w = theta / np.abs(theta).sum(axis=1, keepdims=True)
+    schema = StructType(
+        [
+            StructField("label", docs.schema[label_col].dataType),
+            StructField("term", StringType()),
+            StructField("w", DoubleType()),
+            StructField("theta", DoubleType()),
+        ]
     )
-    denom = (
-        comp.groupBy("label")
-        .agg(F.sum("comp").alias("_s"))
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "label",
-            (F.col("_s") + F.lit(alpha) * F.col("_v")).alias("denom"),
-        )
+    pdf = pd.DataFrame(
+        {
+            "label": np.repeat(np.array(labels, dtype=object), n_v),
+            "term": np.tile(np.array(terms, dtype=object), len(labels)),
+            "w": w.ravel(),
+            "theta": theta.ravel(),
+        }
     )
-    theta = comp.join(F.broadcast(denom), "label").select(
-        "label",
-        "term",
-        F.log((F.col("comp") + F.lit(alpha)) / F.col("denom")).alias("theta"),
-    )
-    z = theta.groupBy("label").agg(F.sum(F.abs(F.col("theta"))).alias("z"))
-    return theta.join(F.broadcast(z), "label").select(
-        "label", "term", (F.col("theta") / F.col("z")).alias("w"), "theta"
-    )
+    return docs.sparkSession.createDataFrame(pdf, schema)
 
 
 def score_text_nb(
@@ -130,8 +136,6 @@ def score_text_nb(
     """
     counts = term_counts(docs, id_col, text_col)
     if df_terms is None:
-        from mahout_samsara_book_spark.functions.text import doc_frequencies
-
         df_terms = doc_frequencies(counts, id_col)
         # broadcast scalar subquery — keeps scoring a single job (no
         # eager count round-trip); see tfidf()
@@ -174,11 +178,12 @@ def predict_text_nb(
     """``(doc_id, label)`` — argmin of complement score (D3 on negated
     scores), ties broken by label for determinism."""
     scores = score_text_nb(docs, weights, df_terms, n_docs, id_col, text_col)
-    w = Window.partitionBy(id_col).orderBy(F.col("score").asc(), F.col("label").asc())
+    # struct order is (score, label): the min is the lowest score, ties
+    # to the smallest label
     return (
-        scores.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "label")
+        scores.groupBy(id_col)
+        .agg(F.min(F.struct("score", "label")).alias("best"))
+        .select(id_col, F.col("best.label").alias("label"))
     )
 
 
@@ -248,12 +253,11 @@ class NBServingModel:
     def from_dataframes(cls, weights: DataFrame, dictionary: DataFrame, df_counts: DataFrame) -> "NBServingModel":
         dic = {r["term"]: r["index"] for r in dictionary.collect()}
         dfc = {r["index"]: r["df"] for r in df_counts.collect()}
-        labels = sorted(
-            r["label"] for r in weights.select("label").distinct().collect()
-        )
+        rows = weights.select("label", "term", "w").collect()
+        labels = sorted({r["label"] for r in rows})
         lab_pos = {l: i for i, l in enumerate(labels)}
         w = np.zeros((len(dic), len(labels)), dtype=np.float64)
-        for r in weights.select("label", "term", "w").collect():
+        for r in rows:
             idx = dic.get(r["term"])
             if idx is not None:
                 w[idx, lab_pos[r["label"]]] = r["w"]

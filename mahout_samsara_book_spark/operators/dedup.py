@@ -254,48 +254,58 @@ def ngram_jaccard(
     _small_pairs: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard for given (doc_a, doc_b) pairs over HASHED
-    shingle sets: |A∩B| via an equi-join on the 8-byte hash restricted
-    to the pairs, sizes via a broadcast-joined per-doc count.
-    ``(doc_a, doc_b, jaccard)``. Accepts string shingles too (hashed on
-    the fly); the oracle replays the identical hashed-set semantics, so
-    a (vanishingly rare) within-doc hash collision cannot desync the
-    two engines.
+    shingle sets: ``(doc_a, doc_b, jaccard)``. Inputs are distinct
+    ``(id, h)`` rows — every shingle builder here emits them that way.
+    String shingles ``(id, shingle)`` are hashed on the fly; the oracle
+    replays the identical hashed-set semantics.
 
-    ``_small_pairs`` (round-12): callers whose pair relation is
-    BOUNDED by contract (the incremental probe — pairs ≤ batch ×
-    bucket-width) set it to broadcast the candidate-id and pair
-    relations explicitly (guide §3.1/§3.2: broadcast semi-join), so
-    the shingle relation — the 100 TB side — is filtered map-side and
-    never shuffled for the semi.  Corpus-scale callers
-    (minhash_lsh_dedup et al.) leave it False: their pair stream can
-    exceed broadcast limits, and the shuffled semi-join is the safe
-    shape."""
+    One grouped pass: the shingles are semi-joined to the distinct
+    candidate ids (either side of any pair) and collected into one hash
+    set per doc; each pair then probes the sets from both sides, and
+    |A∩B| is the size of their intersection. Only the candidate slice of
+    the shingle relation is ever shuffled. A pair that shares no
+    shingle has no row (the oracle's intersect join drops it too).
+
+    ``_small_pairs``: callers whose pair relation is BOUNDED by contract
+    (the incremental probe — pairs ≤ batch × bucket-width) set it to
+    broadcast the candidate ids and the pairs explicitly (guide
+    §3.1/§3.2), so the shingle relation — the 100 TB side — is
+    semi-filtered map-side. Corpus-scale callers (minhash_lsh_dedup et
+    al.) leave it False: their pair stream can exceed broadcast limits,
+    and the shuffled joins are the safe shape."""
     hs = _hashed_shingles(shingle_df, id_col)
-    # Candidate docs are a tiny fraction of the corpus after banding:
-    # semi-filter the shingle relation to them BEFORE any join, so the
-    # intersect/size machinery never shuffles the full corpus's shingle
-    # set — only the candidate slice (which AQE then broadcast-joins).
-    # The semi joins themselves are scale-safe if pairs ever get large.
     maybe_b = F.broadcast if _small_pairs else (lambda df: df)
-    da = maybe_b(pairs.select(F.col("doc_a").alias(id_col)).distinct())
-    db = maybe_b(pairs.select(F.col("doc_b").alias(id_col)).distinct())
-    sa = hs.join(da, id_col, "leftsemi").select(
-        F.col(id_col).alias("doc_a"), F.col("h")
+    ids = (
+        pairs.select(F.col("doc_a").alias(id_col))
+        .union(pairs.select(F.col("doc_b").alias(id_col)))
+        .distinct()
     )
-    sb = hs.join(db, id_col, "leftsemi").select(
-        F.col(id_col).alias("doc_b"), F.col("h")
+    # The explicit exchange is the one the aggregate needs anyway.  It
+    # also keeps the aggregate off a union whose inputs are already
+    # hash-partitioned by id (the in-session probe's corpus ∪ batch):
+    # Spark 4.1 would skip the exchange on the union's output
+    # partitioning, and the two probes below then fail to zip
+    # ("Can't zip RDDs with unequal numbers of partitions").
+    sets = (
+        hs.join(maybe_b(ids), id_col, "leftsemi")
+        .repartition(id_col)
+        .groupBy(id_col)
+        .agg(F.collect_set("h").alias("hs"))
     )
-    inter = (
-        maybe_b(pairs).join(sa, "doc_a")
-        .join(sb, ["doc_b", "h"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    za = maybe_b(sa.groupBy("doc_a").agg(F.count("*").alias("sz_a")))
-    zb = maybe_b(sb.groupBy("doc_b").agg(F.count("*").alias("sz_b")))
+    sa = sets.select(F.col(id_col).alias("doc_a"), F.col("hs").alias("hs_a"))
+    sb = sets.select(F.col(id_col).alias("doc_b"), F.col("hs").alias("hs_b"))
     return (
-        inter.join(za, "doc_a")
-        .join(zb, "doc_b")
+        maybe_b(pairs.select("doc_a", "doc_b"))
+        .join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("hs_a", "hs_b")).cast("long").alias("inter"),
+            F.size("hs_a").cast("long").alias("sz_a"),
+            F.size("hs_b").cast("long").alias("sz_b"),
+        )
+        .filter(F.col("inter") > 0)
         .select(
             "doc_a",
             "doc_b",
@@ -328,8 +338,8 @@ def minhash_lsh_dedup(
     # subtree matches the tracked relation, so the cache serves it.
     fsh, sig = _shingle_sig_fused(docs, n, k, seed, id_col, text_col)
     sh = track(fsh)
-    # the verify stage reads the candidate set three times (both doc-side
-    # semi filters + the intersect join) — cache the banding join's output
+    # the verify reads the candidate set twice (the candidate-id semi
+    # filter + the pair probe) — cache the banding join's output
     cand = track(lsh_candidate_pairs(sig, bands, rows, id_col))
     return ngram_jaccard(sh, cand, id_col).filter(
         F.col("jaccard") >= F.lit(threshold)
@@ -782,9 +792,9 @@ def incremental_dedup(
 
 
 # candidate-pair count at or below which the incremental verify's
-# relations (pairs, candidate-id sets, per-doc sizes) broadcast
-# explicitly — ~32 MB of packed pair longs at the limit; above it the
-# shuffled semi-join shape is the scale-safe fallback (ADVICE r12)
+# relations (pairs, candidate-id set) broadcast explicitly — ~32 MB of
+# packed pair longs at the limit; above it the shuffled semi-join shape
+# is the scale-safe fallback (ADVICE r12)
 PAIRS_BCAST_LIMIT = 2_000_000
 
 # plan-audit escape hatch: True keeps the candidate relation lazy (no
@@ -828,8 +838,8 @@ def _incremental_match(
         ),
         ["band", "sig"],
     ).filter(F.col("doc_a") < F.col("doc_b"))
-    # The candidate relation feeds the verify stage THREE times (both
-    # doc-side semi filters + the intersect join): eagerly
+    # The candidate relation feeds the verify twice (the candidate-id
+    # semi filter + the pair probe of the per-doc hash sets): eagerly
     # localCheckpoint it with an observe() count riding the same job
     # (round-13).  Two birds: (1) every verify consumer's plan sees a
     # LogicalRDD leaf instead of the bucket-probe subtree — the probe's
@@ -862,16 +872,14 @@ def _incremental_match(
     ).filter(
         F.col("jaccard") >= F.lit(threshold)
     )
-    w = Window.partitionBy("doc_b").orderBy(
-        F.col("jaccard").desc(), F.col("doc_a").asc()
-    )
+    # best match per batch doc: highest Jaccard, ties to the lowest id
     best = (
-        verified.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        verified.groupBy("doc_b")
+        .agg(F.min(F.struct((-F.col("jaccard")).alias("neg_j"), "doc_a")).alias("m"))
         .select(
             F.col("doc_b").alias(id_col),
-            F.col("doc_a").alias("dup_of"),
-            "jaccard",
+            F.col("m.doc_a").alias("dup_of"),
+            (-F.col("m.neg_j")).alias("jaccard"),
         )
     )
     # `best` is batch-bounded (≤ one row per batch doc) by the ingest

@@ -516,3 +516,14 @@ def test_index_compact_preserves_probes_and_collects_garbage(
         map(tuple, incremental_dedup_persisted(probe, path).collect())
     )
     assert final == before
+
+
+def test_incremental_equal_jaccard_tie_goes_to_lowest_id(spark):
+    text = "the quick brown fox jumps over the lazy dog tonight"
+    corpus = spark.createDataFrame(
+        [(7, text), (3, text), (5, "completely unrelated text about spark")],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame([(100, text)], "doc_id long, text string")
+    (row,) = incremental_dedup(corpus, batch).collect()
+    assert not row["keep"] and row["dup_of"] == 3 and row["jaccard"] == 1.0

@@ -1,0 +1,59 @@
+"""Spark job-count guards for the text-NB train and the dedup ingest:
+each corpus-sized reduction runs in one pass, so the number of jobs a
+call submits stays flat.  Counted per call with ``setJobGroup`` and
+``statusTracker().getJobIdsForGroup``.  Jobs submitted from pool
+threads (the two concurrent index writes of ``ingest_batch``) do not
+carry the caller's job group and are not counted."""
+
+import itertools
+
+from mahout_samsara_book_spark.algorithms.naive_bayes import train_text_nb
+from mahout_samsara_book_spark.operators.dedup import (
+    dedup_index_persist,
+    ingest_batch,
+)
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"job-count-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_WORDS = [f"w{i}" for i in range(60)]
+
+
+def _text(i: int) -> str:
+    return " ".join(_WORDS[(i * 7 + j * j) % len(_WORDS)] for j in range(14))
+
+
+def test_train_text_nb_job_count(spark):
+    docs = spark.createDataFrame(
+        [(i, _text(i), f"l{i % 5}") for i in range(200)],
+        "doc_id long, text string, lang string",
+    )
+    # one corpus-aggregation plan and its collect: 12 jobs on local[4]
+    assert _jobs(spark, lambda: train_text_nb(docs).collect()) <= 14
+
+
+def test_ingest_batch_job_count(spark, tmp_path):
+    corpus = spark.createDataFrame(
+        [(i, _text(i)) for i in range(150)], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [(1000 + i, _text(i if i % 3 else 10_000 + i)) for i in range(30)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "index")
+    dedup_index_persist(corpus, path)
+    n = _jobs(spark, lambda: ingest_batch(batch, path).collect())
+    # 22 jobs in the caller's group on local[4]
+    assert n <= 24

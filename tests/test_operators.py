@@ -368,3 +368,26 @@ def test_trusted_leaf_estimate_pruning_and_broadcast(spark, tmp_path):
     )
     ot = spark.read.parquet(ot_path).filter(F.col("p") == 3)
     assert est(pt.join(ot, pt["id"] == ot["k2"])) == full
+
+
+def test_ngram_jaccard_matches_python_sets(spark):
+    rng = np.random.default_rng(11)
+    sets = {i: set(rng.choice(40, size=rng.integers(1, 12), replace=False).tolist())
+            for i in range(12)}
+    sets[20] = set(sets[3])  # identical to doc 3
+    sets[21] = {100, 101, 102}  # disjoint from every other doc
+    sh = spark.createDataFrame(
+        [(i, h) for i, s in sets.items() for h in s], "doc_id long, h long"
+    )
+    ids = sorted(sets)
+    want = {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a in ids for b in ids if a < b
+    }
+    pairs = spark.createDataFrame(list(want), "doc_a long, doc_b long")
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"]
+           for r in ngram_jaccard(sh, pairs).collect()}
+    # a pair sharing no hash has no row (the intersect-join contract)
+    assert got == {p: j for p, j in want.items() if j > 0}
+    assert got[(3, 20)] == 1.0
+    assert not any(21 in p for p in got)

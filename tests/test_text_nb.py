@@ -189,3 +189,66 @@ def test_http_serving(docs, nb_weights):
         assert label in {str(l) for l in langs}
     finally:
         server.stop()
+
+
+def _twcnb_reference(rows, alpha=1.0):
+    """TWCNB (TWCNB.scala:109-147) over ``(doc_id, text, label)`` rows in
+    plain numpy/pandas: Lucene tf-idf, full label × vocab grid."""
+    import re
+
+    import pandas as pd
+
+    n = len({i for i, _, _ in rows})
+    tf = pd.DataFrame(
+        [
+            (i, t, lab)
+            for i, text, lab in rows
+            for t in re.split(r"[\W_]+", text.lower())
+            if t
+        ],
+        columns=["doc_id", "term", "label"],
+    ).value_counts().rename("tf").reset_index()
+    df = tf.groupby("term")["doc_id"].nunique()
+    tf["tfidf"] = np.sqrt(tf.tf) * (np.log(n / (tf.term.map(df) + 1.0)) + 1.0)
+    n_ct = tf.pivot_table(
+        index="label", columns="term", values="tfidf", aggfunc="sum", fill_value=0.0
+    )
+    comp = n_ct.sum(axis=0) - n_ct
+    theta = np.log(
+        (comp + alpha).div(comp.sum(axis=1) + alpha * comp.shape[1], axis=0)
+    )
+    w = theta.div(theta.abs().sum(axis=1), axis=0)
+    return theta.stack().rename("theta"), w.stack().rename("w")
+
+
+def test_train_text_nb_matches_numpy_reference(spark):
+    rows = [
+        (0, "apple banana apple", 1),
+        (1, "banana cherry", 1),
+        (2, "cherry date date date", 2),
+        (3, "", 2),  # no tokens: still counts in N
+        (4, "apple cherry cherry", 3),
+        (5, "Date, apple!", 3),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, cls long")
+    got = train_text_nb(docs, label_col="cls")
+    assert got.schema["label"].dataType.simpleString() == "bigint"
+    pdf = got.toPandas().set_index(["label", "term"]).sort_index()
+    theta_ref, w_ref = _twcnb_reference(rows)
+    # full grid: 'banana' never occurs in class 2 or 3, yet has a weight
+    assert len(pdf) == 3 * 4 and ("banana" in pdf.loc[3].index)
+    np.testing.assert_allclose(pdf.theta, theta_ref.sort_index(), rtol=1e-12)
+    np.testing.assert_allclose(pdf.w, w_ref.sort_index(), rtol=1e-12)
+    sums = pdf.w.abs().groupby(level="label").sum()
+    np.testing.assert_allclose(sums, 1.0, rtol=1e-12)
+
+
+def test_predict_text_nb_tie_goes_to_smaller_label(spark):
+    weights = spark.createDataFrame(
+        [(3, "x", -0.5, 0.0), (2, "x", -0.5, 0.0), (5, "x", 0.9, 0.0)],
+        "label long, term string, w double, theta double",
+    )
+    docs = spark.createDataFrame([(0, "x x")], "doc_id long, text string")
+    df_terms = spark.createDataFrame([("x", 1)], "term string, df long")
+    got = predict_text_nb(docs, weights, df_terms, n_docs=4).collect()
+    assert [(r["doc_id"], r["label"]) for r in got] == [(0, 2)]

@@ -15,6 +15,7 @@ import sys
 
 sys.path.insert(0, ".")
 
+from mahout_samsara_book_spark.cache import release_tracked  # noqa: E402
 from mahout_samsara_book_spark.session import get_spark  # noqa: E402
 
 
@@ -132,6 +133,10 @@ def main() -> int:
 
     w = train_text_nb(docs, label_col="lang")
     p6 = plan_of(score_text_nb(docs, w))
+    # train_text_nb executes, so its tracked token counts are now a
+    # materialized cache; release them so later plans over the same
+    # documents (inverted_index) are audited as they plan on their own
+    release_tracked(blocking=True)
     checks.append(
         (
             "NB scoring (docs × model)",
