@@ -7,7 +7,7 @@ Layers (see SURVEY.md §7):
 - :mod:`.drm` — distributed row-matrix layer: a thin wrapper over a
   DataFrame ``(row_id: long, features: array<double>)`` implementing the
   DRM operator surface (SURVEY §2A) as mostly pure Spark SQL expressions,
-  with Arrow/``mapInPandas`` for the block ops.
+  with an Arrow (``mapInArrow``) block codec for the block ops.
 - :mod:`.kernels` — in-core numpy kernels (SURVEY §2B): deterministic
   matrix views, solve, distance matrices, t-distribution stats.
 - :mod:`.algorithms` — the reference's algorithms (SURVEY §2C): ridge

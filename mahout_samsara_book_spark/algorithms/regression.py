@@ -17,10 +17,11 @@ Two physical strategies, same math:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mahout_samsara_book_spark.drm.drm import Drm
+from mahout_samsara_book_spark.drm.drm import FEAT, Drm, _decode
 from mahout_samsara_book_spark.kernels.incore import solve
 from mahout_samsara_book_spark.kernels.stats import student_t_sf
 
@@ -95,11 +96,6 @@ def ssr_xy(drm_xy: Drm, beta: np.ndarray, strategy: str = "sql") -> float:
     SINGLE partial Σr² — one double per partition back — with broadcast
     β (A18); the shape a NON-linear per-block reduction needs, kept for
     operator parity and tested equal."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mahout_samsara_book_spark.drm.drm import FEAT
-
     beta = np.asarray(beta, dtype=np.float64).ravel()
     if strategy == "sql":
         n_feat = len(beta) - 1
@@ -119,19 +115,18 @@ def ssr_xy(drm_xy: Drm, beta: np.ndarray, strategy: str = "sql") -> float:
         return float(total) if total is not None else 0.0
 
     bc = drm_xy.spark.sparkContext.broadcast(beta)
+    ncol = drm_xy.ncol
 
     def partials(batches):
         b = bc.value
         acc = 0.0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            block = np.array(pdf[FEAT].tolist(), dtype=np.float64)
+        for batch in batches:
+            _, block = _decode(batch, ncol)
             r = b[0] + block[:, :-1] @ b[1:] - block[:, -1]
             acc += float(r @ r)
-        yield pd.DataFrame({"s": [acc]})
+        yield pa.RecordBatch.from_pydict({"s": [acc]})
 
-    part = drm_xy.df.select(FEAT).mapInPandas(partials, schema="s double")
+    part = drm_xy.df.mapInArrow(partials, schema="s double")
     total = part.agg(F.sum("s").alias("s")).first()["s"]
     return float(total) if total is not None else 0.0
 

@@ -15,9 +15,12 @@ Design rules (SURVEY §7, 100 TB posture):
   (``transform`` / ``aggregate`` / ``zip_with`` / ``slice`` /
   ``posexplode`` + groupBy) so plans stay inside whole-stage codegen and
   are relationally checkable against the DuckDB oracle.
-- Arrow record batches via ``mapInPandas`` are the analog of Samsara's
+- Arrow record batches via ``mapInArrow`` are the analog of Samsara's
   vertical blockification (``(keys, block)`` closures): numpy 2-D blocks
-  in, numpy 2-D blocks out. Used only where SQL genuinely can't express
+  in, numpy 2-D blocks out. One codec owns the format — ``_decode``
+  reads a batch's ``features`` list column straight into a
+  ``float64[n, ncol]`` array and ``_encode`` writes one back, with no
+  per-row Python objects. Used only where SQL genuinely can't express
   the op (gram partials, arbitrary block functions).
 - ``collect``-shaped results are only legal for *declared-small* outputs
   (gram matrices, sketches, models) — everything row-scaled stays
@@ -30,14 +33,17 @@ import functools
 from collections.abc import Callable, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mahout_samsara_book_spark.cache import release, track
+from mahout_samsara_book_spark.kernels.sparse import CsrMatrix
 
 KEY = "row_id"
 FEAT = "features"
+_SCHEMA = f"{KEY} long, {FEAT} array<double>"
 
 # Widths at/below this use ncol-wide column expressions (one pass, no
 # explode); above it, explode-based plans or Arrow blocks take over.
@@ -50,55 +56,58 @@ _NARROW_NCOL = 64
 _T_MAX_WIDTH = 65_536
 
 
-def _rows_to_pdf(keys: np.ndarray, block: np.ndarray) -> pd.DataFrame:
-    # dtype=object keeps an EMPTY features column list-typed — a plain
-    # empty column defaults to float64, which Arrow can't convert to
-    # list<double>.
-    return pd.DataFrame(
-        {
-            KEY: pd.Series(keys, dtype="int64"),
-            FEAT: pd.Series([row.tolist() for row in block], dtype=object),
-        }
+def _decode(batch, ncol: int) -> tuple[np.ndarray, np.ndarray]:
+    """The block view of one Arrow batch (or table): ``(keys, block)``
+    with ``block`` a ``float64[n, ncol]`` array. Every row must hold
+    exactly ``ncol`` values — a bare reshape would silently realign
+    ragged rows (widths 3 and 5 fill two rows of 4)."""
+    feats = batch.column(FEAT)
+    if np.any(np.asarray(pc.list_value_length(feats)) != ncol):
+        raise ValueError(f"DRM rows are not all ncol={ncol} wide")
+    # list_flatten honours slice offsets (``.values`` would not)
+    flat = np.array(pc.list_flatten(feats), dtype=np.float64)
+    keys = np.asarray(batch.column(KEY), dtype=np.int64)
+    return keys, flat.reshape(len(feats), ncol)
+
+
+def _encode(keys: np.ndarray, block: np.ndarray) -> pa.RecordBatch:
+    """``(keys, block)`` → an Arrow batch of the DRM schema. A zero-row
+    block still yields a ``list<double>`` column."""
+    block = np.ascontiguousarray(block, dtype=np.float64)
+    n, m = block.shape
+    feats = pa.ListArray.from_arrays(
+        pa.array(np.arange(n + 1, dtype=np.int32) * m), pa.array(block.ravel())
+    )
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.asarray(keys, dtype=np.int64)), feats], names=[KEY, FEAT]
     )
 
 
-def _pdf_to_block(pdf: pd.DataFrame, ncol: int) -> tuple[np.ndarray, np.ndarray]:
-    keys = pdf[KEY].to_numpy()
-    if len(pdf) == 0:
-        return keys, np.zeros((0, ncol), dtype=np.float64)
-    block = np.array(pdf[FEAT].tolist(), dtype=np.float64)
-    return keys, block
+def _partition(batches) -> pa.Table | None:
+    """All Arrow batches of one task as one table; ``None`` when the
+    partition holds no rows."""
+    batches = list(batches)
+    if not any(b.num_rows for b in batches):
+        return None
+    return pa.Table.from_batches(batches)
 
 
-def _partial_pdf(pid: int, partial) -> pd.DataFrame:
-    """One partition's ``allreduce_block`` partial as rows. A zero-row
-    partial becomes one ``ridx = -1`` row carrying its width, so the
-    reduce can tell a ``map_fn`` that returned nothing from a DRM that
-    has no rows."""
-    partial = np.asarray(partial, dtype=np.float64)
-    if partial.ndim == 1:
-        partial = partial[None, :]
-    if partial.shape[0] == 0:
-        return pd.DataFrame(
-            {
-                "pid": [pid],
-                "ridx": [-1],
-                FEAT: pd.Series([[0.0] * partial.shape[1]], dtype=object),
-            }
-        )
-    return pd.DataFrame(
-        {
-            "pid": pid,
-            "ridx": np.arange(partial.shape[0]),
-            FEAT: pd.Series([r.tolist() for r in partial], dtype=object),
-        }
-    )
+def _csr(batches, ncol: int) -> tuple[np.ndarray, CsrMatrix] | None:
+    """One partition of the COO view ``(row_id, pos, v)`` as
+    ``(keys, CsrMatrix)`` over its distinct row keys; ``None`` when the
+    partition holds no entries."""
+    coo = _partition(batches)
+    if coo is None:
+        return None
+    keys, local = np.unique(np.asarray(coo.column(KEY)), return_inverse=True)
+    cols, vals = np.asarray(coo.column("pos")), np.asarray(coo.column("v"))
+    return keys, CsrMatrix.from_coo(local, cols, vals, (len(keys), ncol))
 
 
 def drm_broadcast(spark: SparkSession, value: np.ndarray):
     """``drmBroadcast(v)`` — ship an in-core vector/matrix to all tasks
     (TWCNB.scala:118,135; BahmaniSketch.scala:104). Thin wrapper so user
-    code mirrors the reference; pandas-UDF closures deref with ``.value``.
+    code mirrors the reference; block closures deref with ``.value``.
     """
     return spark.sparkContext.broadcast(np.asarray(value, dtype=np.float64))
 
@@ -129,8 +138,8 @@ class Drm:
         mx = np.asarray(mx, dtype=np.float64)
         if mx.ndim == 1:
             mx = mx[:, None]
-        pdf = _rows_to_pdf(np.arange(mx.shape[0], dtype=np.int64), mx)
-        df = spark.createDataFrame(pdf, schema=f"{KEY} long, {FEAT} array<double>")
+        batch = _encode(np.arange(mx.shape[0]), mx)
+        df = spark.createDataFrame(pa.Table.from_batches([batch]), schema=_SCHEMA)
         if num_partitions:
             df = df.repartition(num_partitions)
         return cls(df, ncol=mx.shape[1], nrow=mx.shape[0])
@@ -199,14 +208,10 @@ class Drm:
     def collect(self) -> np.ndarray:
         """``drm.collect`` (A2 — TWCNBSuite.scala:86,116). Driver-bound:
         only for declared-small matrices."""
-        pdf = self.df.orderBy(KEY).toPandas()
-        if len(pdf) == 0:
-            return np.zeros((0, self.ncol), dtype=np.float64)
-        return np.array(pdf[FEAT].tolist(), dtype=np.float64)
+        return self.collect_keys_matrix()[1]
 
     def collect_keys_matrix(self) -> tuple[np.ndarray, np.ndarray]:
-        pdf = self.df.orderBy(KEY).toPandas()
-        return _pdf_to_block(pdf, self.ncol)
+        return _decode(self.df.orderBy(KEY).toArrow(), self.ncol)
 
     def collect_col(self, j: int) -> np.ndarray:
         """``drm.collect(::, j)`` (A3 — LinearRegression.scala:30,46,74):
@@ -372,11 +377,8 @@ class Drm:
             16,
             10,
         ).cast("long")
-        sampled = (
-            self.df.orderBy(h, F.col(KEY), F.col(FEAT)).limit(k).toPandas()
-        )
-        _, block = _pdf_to_block(sampled, self.ncol)
-        return block
+        sampled = self.df.orderBy(h, F.col(KEY), F.col(FEAT)).limit(k)
+        return _decode(sampled.toArrow(), self.ncol)[1]
 
     # ------------------------------------------------------------------ #
     # elementwise / scalar-function ops (A19, B7/B8 distributed subset)
@@ -610,18 +612,19 @@ class Drm:
         def partials(batches):
             acc = np.zeros((n, n), dtype=np.float64)
             seen = False
-            for pdf in batches:
-                _, block = _pdf_to_block(pdf, n)
+            for batch in batches:
+                _, block = _decode(batch, n)
                 if block.shape[0]:
                     acc += block.T @ block
                     seen = True
             if seen:
                 iu = np.triu_indices(n)
-                yield pd.DataFrame(
-                    {"i": iu[0], "j": iu[1], "v": acc[iu]}
+                yield pa.RecordBatch.from_pydict(
+                    {"i": iu[0].astype(np.int32), "j": iu[1].astype(np.int32),
+                     "v": acc[iu]}
                 )
 
-        triplets = self.df.mapInPandas(partials, schema="i int, j int, v double")
+        triplets = self.df.mapInArrow(partials, schema="i int, j int, v double")
         return triplets.groupBy("i", "j").agg(F.sum("v").alias("v"))
 
     def gram(self) -> np.ndarray:
@@ -644,24 +647,34 @@ class Drm:
         y is broadcast; per-partition partials ``blockᵀ @ y[keys]`` are
         summed — map-side only, single-row-per-partition shuffle. Requires
         positional int keys (0..nrow-1), like the reference's
-        ``DrmLike[Int]`` contract."""
+        ``DrmLike[Int]`` contract; a key outside ``[0, len(y))`` raises
+        ``ValueError`` instead of wrapping or indexing past ``y``."""
         y = np.asarray(y, dtype=np.float64).ravel()
         bc = self.spark.sparkContext.broadcast(y)
         n = self.ncol
 
         def partials(batches):
+            yv = bc.value
             acc = np.zeros(n, dtype=np.float64)
             seen = False
-            for pdf in batches:
-                keys, block = _pdf_to_block(pdf, n)
+            for batch in batches:
+                keys, block = _decode(batch, n)
                 if block.shape[0]:
-                    acc += block.T @ bc.value[keys]
+                    if keys.min() < 0 or keys.max() >= len(yv):
+                        raise ValueError(
+                            "atx requires positional row keys 0..nrow-1 "
+                            f"indexing y (len {len(yv)}); got keys in "
+                            f"[{keys.min()}, {keys.max()}]. Call .reindex()."
+                        )
+                    acc += block.T @ yv[keys]
                     seen = True
             if seen:
-                yield pd.DataFrame({"pos": np.arange(n), "v": acc})
+                yield pa.RecordBatch.from_pydict(
+                    {"pos": np.arange(n, dtype=np.int32), "v": acc}
+                )
 
         pdf = (
-            self.df.mapInPandas(partials, schema="pos int, v double")
+            self.df.mapInArrow(partials, schema="pos int, v double")
             .groupBy("pos")
             .agg(F.sum("v").alias("v"))
             .toPandas()
@@ -691,12 +704,11 @@ class Drm:
         n = self.ncol
 
         def op(batches):
-            for pdf in batches:
-                keys, block = _pdf_to_block(pdf, n)
-                yield _rows_to_pdf(keys, (block @ bc.value)[:, None])
+            for batch in batches:
+                keys, block = _decode(batch, n)
+                yield _encode(keys, (block @ bc.value)[:, None])
 
-        out = self.df.mapInPandas(op, schema=f"{KEY} long, {FEAT} array<double>")
-        return Drm(out, 1, self._nrow)
+        return Drm(self.df.mapInArrow(op, schema=_SCHEMA), 1, self._nrow)
 
     def mmul(self, other: Drm | np.ndarray, strategy: str = "auto") -> Drm:
         """``drmA %*% drmB`` (A6/A10 — TWCNBSuite.scala:115). Row keys of
@@ -721,13 +733,11 @@ class Drm:
             n = self.ncol
 
             def op(batches):
-                for pdf in batches:
-                    keys, block = _pdf_to_block(pdf, n)
-                    yield _rows_to_pdf(keys, block @ bc.value)
+                for batch in batches:
+                    keys, block = _decode(batch, n)
+                    yield _encode(keys, block @ bc.value)
 
-            out = self.df.mapInPandas(
-                op, schema=f"{KEY} long, {FEAT} array<double>"
-            )
+            out = self.df.mapInArrow(op, schema=_SCHEMA)
             return Drm(out, b.shape[1], self._nrow)
 
         if other.ncol is None or self.ncol is None:
@@ -909,50 +919,9 @@ class Drm:
         """
         out_ncol = ncol if ncol is not None else self.ncol
         in_ncol = self.ncol
-        if flavor == "sparse":
-            return self._map_block_sparse(fn, in_ncol, out_ncol)
 
-        def op(batches):
-            for pdf in batches:
-                keys, block = _pdf_to_block(pdf, in_ncol)
-                if block.shape[0] == 0:
-                    continue
-                keys2, block2 = fn(keys, block)
-                if block2.shape[1] != out_ncol:
-                    raise ValueError(
-                        f"mapBlock fn returned width {block2.shape[1]}, "
-                        f"declared ncol={out_ncol}"
-                    )
-                yield _rows_to_pdf(np.asarray(keys2, dtype=np.int64), block2)
-
-        out = self.df.mapInPandas(op, schema=f"{KEY} long, {FEAT} array<double>")
-        return Drm(out, out_ncol, self._nrow if out_ncol == in_ncol else None)
-
-    def _map_block_sparse(self, fn, in_ncol: int, out_ncol: int) -> Drm:
-        """Sparse-flavor map_block: one CSR block per partition, fed from
-        the zero-pruned COO projection (see :meth:`map_block`)."""
-        from mahout_samsara_book_spark.kernels.sparse import CsrMatrix
-
-        coo = self.to_coo()
-
-        def op(batches):
-            rs, cs, vs = [], [], []
-            for pdf in batches:
-                if len(pdf):
-                    rs.append(pdf[KEY].to_numpy(dtype=np.int64))
-                    cs.append(pdf["pos"].to_numpy(dtype=np.int64))
-                    vs.append(pdf["v"].to_numpy(dtype=np.float64))
-            if not rs:
-                return
-            r = np.concatenate(rs)
-            keys, local = np.unique(r, return_inverse=True)
-            csr = CsrMatrix.from_coo(
-                local,
-                np.concatenate(cs),
-                np.concatenate(vs),
-                (len(keys), in_ncol),
-            )
-            keys2, block2 = fn(keys, csr)
+        def emit(keys, block):
+            keys2, block2 = fn(keys, block)
             if isinstance(block2, CsrMatrix):
                 block2 = block2.to_dense()
             block2 = np.asarray(block2, dtype=np.float64)
@@ -961,10 +930,24 @@ class Drm:
                     f"mapBlock fn returned shape {block2.shape}, "
                     f"declared ncol={out_ncol}"
                 )
-            yield _rows_to_pdf(np.asarray(keys2, dtype=np.int64), block2)
+            return _encode(keys2, block2)
 
-        out = coo.mapInPandas(op, schema=f"{KEY} long, {FEAT} array<double>")
-        return Drm(out, out_ncol)
+        def op(batches):
+            for batch in batches:
+                keys, block = _decode(batch, in_ncol)
+                if block.shape[0]:
+                    yield emit(keys, block)
+
+        def op_sparse(batches):
+            part = _csr(batches, in_ncol)
+            if part is not None:
+                yield emit(*part)
+
+        if flavor == "sparse":
+            out = self.to_coo().mapInArrow(op_sparse, schema=_SCHEMA)
+            return Drm(out, out_ncol)
+        out = self.df.mapInArrow(op, schema=_SCHEMA)
+        return Drm(out, out_ncol, self._nrow if out_ncol == in_ncol else None)
 
     def allreduce_block(
         self,
@@ -977,8 +960,9 @@ class Drm:
         arbitrary in-core matrix, associatively reduce to ONE driver-side
         matrix. Partition-side the blocks of one task are concatenated so
         ``map_fn`` sees the whole partition (matching Samsara's
-        one-block-per-partition contract); partials come back as rows and
-        reduce on the driver — legal because allreduce results are
+        one-block-per-partition contract); each partial comes back as one
+        ``(pid, nrow, ncol, values)`` row and the driver reduces them in
+        partition order — legal because allreduce results are
         declared-small by contract.
 
         ``flavor='sparse'`` hands ``map_fn`` a CSR block built from the
@@ -991,55 +975,40 @@ class Drm:
         nothing) returns a zero-row matrix of ``map_fn``'s width."""
         in_ncol = self.ncol
 
+        def blocks(batches):
+            if flavor == "sparse":
+                return _csr(batches, in_ncol)
+            table = _partition(batches)
+            return None if table is None else _decode(table, in_ncol)
+
         def op(batches):
             from pyspark import TaskContext
 
-            pid = TaskContext.get().partitionId()
-            chunks_k, chunks_b = [], []
-            for pdf in batches:
-                keys, block = _pdf_to_block(pdf, in_ncol)
-                if block.shape[0]:
-                    chunks_k.append(keys)
-                    chunks_b.append(block)
-            if not chunks_b:
+            part = blocks(batches)
+            if part is None:
                 return
-            keys = np.concatenate(chunks_k)
-            block = np.vstack(chunks_b)
-            yield _partial_pdf(pid, map_fn(keys, block))
-
-        def op_sparse(batches):
-            from pyspark import TaskContext
-
-            from mahout_samsara_book_spark.kernels.sparse import CsrMatrix
-
-            pid = TaskContext.get().partitionId()
-            rs, cs, vs = [], [], []
-            for pdf in batches:
-                if len(pdf):
-                    rs.append(pdf[KEY].to_numpy(dtype=np.int64))
-                    cs.append(pdf["pos"].to_numpy(dtype=np.int64))
-                    vs.append(pdf["v"].to_numpy(dtype=np.float64))
-            if not rs:
-                return
-            r = np.concatenate(rs)
-            keys, local = np.unique(r, return_inverse=True)
-            csr = CsrMatrix.from_coo(
-                local, np.concatenate(cs), np.concatenate(vs), (len(keys), in_ncol)
+            partial = np.asarray(map_fn(*part), dtype=np.float64)
+            if partial.ndim == 1:
+                partial = partial[None, :]
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "pid": [TaskContext.get().partitionId()],
+                    "nrow": [partial.shape[0]],
+                    "ncol": [partial.shape[1]],
+                    "v": pa.array([partial.ravel()], pa.list_(pa.float64())),
+                }
             )
-            yield _partial_pdf(pid, map_fn(keys, csr))
 
         src = self.to_coo() if flavor == "sparse" else self.df
-        pdf = src.mapInPandas(
-            op_sparse if flavor == "sparse" else op,
-            schema=f"pid int, ridx int, {FEAT} array<double>",
-        ).toPandas()
-        if len(pdf) == 0:
+        schema = "pid long, nrow long, ncol long, v array<double>"
+        res = src.mapInArrow(op, schema=schema).toArrow().sort_by("pid")
+        if res.num_rows == 0:
             raise ValueError("allreduce_block over an empty DRM")
-        empty = pdf["ridx"] < 0
-        if empty.all():  # rows, but every map_fn returned none
-            return np.zeros((0, len(pdf[FEAT].iloc[0])), dtype=np.float64)
-        pdf = pdf[~empty]
-        partials = []
-        for _, grp in pdf.sort_values(["pid", "ridx"]).groupby("pid", sort=True):
-            partials.append(np.array(grp[FEAT].tolist(), dtype=np.float64))
-        return functools.reduce(reduce_fn, partials)
+        nrows, ncols = (np.asarray(res.column(c)) for c in ("nrow", "ncol"))
+        flat = np.array(pc.list_flatten(res.column("v")), dtype=np.float64)
+        parts = np.split(flat, np.cumsum(nrows * ncols)[:-1])
+        partials = [p.reshape(r, c) for p, r, c in zip(parts, nrows, ncols)]
+        nonempty = [p for p in partials if p.shape[0]]
+        if not nonempty:  # rows, but every map_fn returned none
+            return partials[0]
+        return functools.reduce(reduce_fn, nonempty)

@@ -39,8 +39,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Vertical-block height for mapInPandas block operators (SURVEY §4):
-        # one Arrow batch == one in-core block handed to numpy kernels.
+        # Vertical-block height for the DRM's mapInArrow block operators
+        # (SURVEY §4): one Arrow batch == one in-core block the drm codec
+        # hands to numpy kernels.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")

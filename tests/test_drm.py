@@ -1,8 +1,14 @@
+import ast
+import os
+
 import numpy as np
+import pyarrow as pa
 import pytest
 
-from mahout_samsara_book_spark.drm.drm import Drm
+import mahout_samsara_book_spark as pkg
+from mahout_samsara_book_spark.drm.drm import FEAT, Drm, _decode, _encode
 from mahout_samsara_book_spark.kernels.incore import symmetric_uniform_view
+from mahout_samsara_book_spark.kernels.sparse import CsrMatrix
 
 
 @pytest.fixture(scope="module")
@@ -297,3 +303,136 @@ def test_mmul_coo_rejects_nonpositional_b(spark, mx):
         da.mmul(db_bad, strategy="coo")
     fixed = db_bad.reindex(unique_keys=True)
     assert np.allclose(da.mmul(fixed, strategy="coo").collect(), mx @ b)
+
+
+# --------------------------------------------------------------------- #
+# the Arrow block codec
+# --------------------------------------------------------------------- #
+
+
+def test_decode_honours_slice_offsets():
+    block = np.arange(40, dtype=np.float64).reshape(10, 4)
+    batch = _encode(np.arange(10) + 100, block).slice(3, 4)
+    keys, got = _decode(batch, 4)
+    assert list(keys) == [103, 104, 105, 106]
+    assert np.array_equal(got, block[3:7])
+    empty = _encode(np.arange(0), np.zeros((0, 4)))
+    assert empty.schema.field(FEAT).type == pa.list_(pa.float64())
+    assert _decode(empty, 4)[1].shape == (0, 4)
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """Seven-row Arrow batches: every partition arrives as several."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_codec_block_ops_on_many_batches(spark, mx, small_arrow_batches):
+    d = Drm.from_numpy(spark, mx, num_partitions=2)
+    assert np.allclose(d.gram(), mx.T @ mx, atol=1e-10)
+    y = np.arange(40, dtype=np.float64)
+    assert np.allclose(d.atx(y), mx.T @ y, atol=1e-10)
+    b = symmetric_uniform_view(6, 3, 77)
+    assert np.allclose(d.mmul(b).collect(), mx @ b, atol=1e-10)
+    wide = symmetric_uniform_view(30, 100, 3)
+    bw = np.linspace(0, 1, 100)
+    dw = Drm.from_numpy(spark, wide, num_partitions=2)
+    assert np.allclose(dw.ax(bw).collect()[:, 0], wide @ bw)
+
+
+@pytest.mark.parametrize("flavor", ["dense", "sparse"])
+def test_codec_map_and_allreduce_on_many_batches(
+    spark, mx, small_arrow_batches, flavor
+):
+    def dense(block):  # local: worker closures cannot import test modules
+        return block.to_dense() if isinstance(block, CsrMatrix) else block
+
+    d = Drm.from_numpy(spark, mx, num_partitions=2)
+    out = d.map_block(
+        lambda k, b: (k, np.hstack([dense(b), k[:, None]])),
+        ncol=7,
+        flavor=flavor,
+    )
+    assert np.allclose(out.collect(), np.hstack([mx, np.arange(40)[:, None]]))
+    g = d.allreduce_block(
+        lambda k, b: dense(b).T @ dense(b), lambda a, b: a + b, flavor=flavor
+    )
+    assert np.allclose(g, mx.T @ mx, atol=1e-10)
+
+
+def test_codec_rejects_ragged_rows(spark):
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0, 3.0, 4.0, 5.0])],
+        "row_id long, features array<double>",
+    ).coalesce(1)
+    d = Drm.from_df(df, ncol=4)
+    with pytest.raises(Exception, match="ValueError: DRM rows are not all"):
+        d.gram()
+    with pytest.raises(Exception, match="ValueError: DRM rows are not all"):
+        d.map_block(lambda k, b: (k, b)).collect()
+
+
+def test_map_block_returning_no_rows(spark, mx):
+    out = Drm.from_numpy(spark, mx, num_partitions=2).map_block(
+        lambda k, b: (k[:0], b[:0])
+    )
+    assert out.df.schema[FEAT].dataType.simpleString() == "array<double>"
+    assert out.collect().shape == (0, 6)
+
+
+def test_atx_rejects_non_positional_keys(spark, mx):
+    """Keys shifted by -1 would index y[-1] (silent wrap) and y[len-1]."""
+    d = Drm.from_numpy(spark, mx).map_block(lambda k, b: (k - 1, b))
+    with pytest.raises(Exception, match="positional row keys"):
+        d.atx(np.arange(40, dtype=np.float64))
+
+
+# The block format has one owner: the codec in drm.py. These modules
+# read and write DRM blocks and must go through it.
+CODEC_MODULES = ("drm/drm.py", "algorithms/regression.py")
+
+
+def _codec_violations(rel: str, tree: ast.AST) -> list[str]:
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+            out.append(f"{rel}:{node.lineno} mapInPandas")
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "tolist"
+        ):
+            out.append(f"{rel}:{node.lineno} .tolist()")
+        elif isinstance(node, ast.Import) and any(
+            a.name.split(".")[0] == "pandas" for a in node.names
+        ):
+            out.append(f"{rel}:{node.lineno} imports pandas")
+        elif (
+            isinstance(node, ast.ImportFrom)
+            and (node.module or "").split(".")[0] == "pandas"
+        ):
+            out.append(f"{rel}:{node.lineno} imports from pandas")
+    return out
+
+
+def test_block_codec_has_one_owner():
+    pkg_dir = os.path.dirname(pkg.__file__)
+    found = []
+    for rel in CODEC_MODULES:
+        with open(os.path.join(pkg_dir, rel), encoding="utf-8") as fh:
+            found += _codec_violations(rel, ast.parse(fh.read(), rel))
+    assert found == []
+
+
+def test_codec_scan_flags_the_list_detour():
+    src = (
+        "import pandas as pd\nfrom pandas import DataFrame\n"
+        "df.mapInPandas(f, schema=s)\nrow.tolist()\n"
+    )
+    assert len(_codec_violations("drm/drm.py", ast.parse(src))) == 4
