@@ -605,9 +605,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "reg_coeff_tests": _q_coeff_tests,
     }
     # Ordering is deliberate: the driver's correctness gate truncates
-    # after ~50 queries.  Window, by the standing rule: (1) every query
-    # whose execution now runs the Arrow block codec of drm/drm.py — the
-    # rows that reach gram_df, map_block, allreduce_block, sample_k_rows,
+    # after ~50 queries.  Window, by the standing rule: (0) the rows
+    # whose path the in-core ingest batch changed — the incremental
+    # probe family, the ingest lifecycle and the stream ingest, which
+    # now hold the batch's shingles and candidate pairs as local
+    # relations; (1) every query whose execution now runs the Arrow
+    # block codec of drm/drm.py — the rows that reach gram_df, map_block, allreduce_block, sample_k_rows,
     # mmul(ndarray), from_numpy or collect_keys_matrix at sf0.01 (the DRM
     # operators, the gram-based emb_* decompositions, TWCNB, Bahmani) —
     # and the ridge rows of algorithms/regression.py, whose block
@@ -620,6 +623,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # text_token_stats, text_bpe_*) and the r8/r9 rows the previous
     # window graded first go first in the next window.
     rotation = [
+        # -- (0) batch held in core on the ingest/probe path
+        "dedup_incremental", "dedup_incremental_persisted",
+        "dedup_incremental_append", "dedup_compact_probe",
+        "dedup_ingest_lifecycle", "ev_stream_ingest",
         # -- (1) run the new block codec
         "drm_gram", "drm_gram_wide", "drm_mmul", "drm_mmul_coo",
         "drm_map_block", "drm_allreduce", "drm_sample_k", "twcnb_train",
@@ -637,9 +644,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nb_train_text", "nb_predict_text",
         "dedup_lsh_jaccard", "dedup_clusters", "graph_components_lsls",
         "text_minhash_dedup_pairs", "sel_dedup_survivors",
-        "dedup_incremental", "dedup_incremental_persisted",
-        "dedup_incremental_append", "dedup_compact_probe",
-        "dedup_ingest_lifecycle", "ev_stream_ingest",
         "graph_kcore", "drm_rbind",
     ]
     missing = set(rotation) - full.keys()

@@ -686,24 +686,27 @@ WHERE CAST(i.inter AS DOUBLE) / (za.sz + zb.sz - i.inter) >= 0.5
 """
 
 
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-ingest shape: the batch = every 50th doc (held OUT of the
+def _ddx_probe_batch(docs: DataFrame) -> DataFrame:
+    """The incremental probe's batch: every 50th doc (held OUT of the
     corpus — genuinely new texts, keep=true) plus exact copies of docs
     0-9 under fresh ids (near-dups of corpus members, keep=false)."""
+    return docs.filter(F.col("doc_id") % 50 == 17).unionByName(
+        docs.filter(F.col("doc_id") < 10).select(
+            (F.col("doc_id") + 1000000).alias("doc_id"), "text"
+        )
+    )
+
+
+def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crawl-ingest shape: the corpus is every doc outside the batch
+    (:func:`_ddx_probe_batch`)."""
     from mahout_samsara_book_spark.operators.dedup import incremental_dedup
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     corpus = docs.filter(F.col("doc_id") % 50 != 17)
-    batch = (
-        docs.filter(F.col("doc_id") % 50 == 17)
-        .unionByName(
-            docs.filter(F.col("doc_id") < 10).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-            )
-        )
-    )
+    batch = _ddx_probe_batch(docs)
     out = incremental_dedup(
         corpus, batch, n=3, k=MINHASH_K, bands=LSH_BANDS,
         seed=MINHASH_SEED, threshold=0.5,
@@ -2768,14 +2771,7 @@ def q_dedup_incremental_persisted(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    batch = (
-        docs.filter(F.col("doc_id") % 50 == 17)
-        .unionByName(
-            docs.filter(F.col("doc_id") < 10).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-            )
-        )
-    )
+    batch = _ddx_probe_batch(docs)
     path = _dedup_index_path(spark, sf_dir)
     out = incremental_dedup_persisted(
         batch, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
@@ -3019,60 +3015,29 @@ def q_dedup_ingest_lifecycle(
     b3 = docs.filter(F.col("doc_id") % 50 == 29).select(
         (F.col("doc_id") + DDX_REKEY2).alias("doc_id"), "text"
     )
-    # Precompute every batch's fused shingle/signature build
-    # CONCURRENTLY before the sequential probe/append chain (round-13,
-    # guide §2.6): the builds depend only on the batch text — never on
-    # the index — so they are legal to overlap, while each PROBE must
-    # still bind the index snapshot its batch sees (single-writer
-    # order unchanged: ingest_batch(i) runs strictly before i+1).
-    # Serially the three build jobs cost ~0.8 s each ahead of their
-    # probes; submitted together they run while batch 1's probe holds
-    # the tail of the cluster.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from mahout_samsara_book_spark.cache import release
-    from mahout_samsara_book_spark.operators.dedup import (
-        _shingle_sig_fused,
-    )
-
-    batches = [b1, b2, b3]
     outs = []
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        builds = [
-            pool.submit(
-                _shingle_sig_fused,
-                b, 3, MINHASH_K, MINHASH_SEED, "doc_id", "text",
-                materialize=True,
+    for i, b in enumerate([b1, b2, b3], start=1):
+        # materialize NOW: the next ingest appends more index rows,
+        # which this batch's probe must not see.  The LAST batch is
+        # checkpointed too (ADVICE r11): it makes the returned
+        # DataFrame self-contained, so the NEXT invocation's rmtree of
+        # this working copy can never invalidate a still-unexecuted
+        # result (the build-N+1-before-execute-N hazard).  The
+        # localCheckpoint runs through ingest_batch's `materialize`
+        # hook, OVERLAPPING the probe's jobs with the append's (guide
+        # §2.6) — per-batch wall ≈ max(probe, append), with the
+        # cross-batch sequencing (single-writer) unchanged because
+        # ingest_batch returns only after both finish.  Each batch's
+        # shingles are one batch-sized job inside ingest_batch.
+        outs.append(
+            ingest_batch(
+                b, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
+                seed=MINHASH_SEED, threshold=0.5,
+                materialize=lambda df, i=i: df.withColumn(
+                    "batch", F.lit(i).cast("long")
+                ).localCheckpoint(),
             )
-            for b in batches
-        ]
-        for i, b in enumerate(batches, start=1):
-            # materialize NOW: the next ingest appends more index rows,
-            # which this batch's probe must not see.  The LAST batch is
-            # checkpointed too (ADVICE r11): it makes the returned
-            # DataFrame self-contained, so the NEXT invocation's rmtree
-            # of this working copy can never invalidate a
-            # still-unexecuted result (the build-N+1-before-execute-N
-            # hazard).  The localCheckpoint runs through ingest_batch's
-            # `materialize` hook, OVERLAPPING the probe's jobs with the
-            # append's (guide §2.6) — per-batch wall ≈ max(probe,
-            # append), with the cross-batch sequencing (single-writer)
-            # unchanged because ingest_batch returns only after both
-            # finish.  The checkpointed output reads nothing of the
-            # batch's prebuilt pair, so the pair is released after it.
-            sh_b, sig_b = builds[i - 1].result()
-            outs.append(
-                ingest_batch(
-                    b, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
-                    seed=MINHASH_SEED, threshold=0.5,
-                    materialize=lambda df, i=i: df.withColumn(
-                        "batch", F.lit(i).cast("long")
-                    ).localCheckpoint(),
-                    _sh=sh_b, _sig=sig_b,
-                )
-            )
-            release(sh_b)
-            release(sig_b)
+        )
     union = outs[0]
     for o in outs[1:]:
         union = union.unionByName(o)

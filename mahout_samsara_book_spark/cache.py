@@ -43,7 +43,8 @@ _TRACKED: list[DataFrame] = []
 # id(checkpoint result) -> the JVM RDD holding its blocks: unpersisting
 # the DataFrame itself is a no-op, it is not in the CacheManager
 _CHECKPOINT_RDDS: dict[int, object] = {}
-# prebuild pools register from worker threads
+# a caller's hook may register from a pool thread (ingest_batch's
+# `materialize` runs beside the append)
 _LOCK = threading.Lock()
 
 

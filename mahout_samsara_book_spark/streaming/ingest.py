@@ -24,15 +24,11 @@ ingest rate = batch size / (probe+append wall) — the SCALING.md
 
 from __future__ import annotations
 
-import glob
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 
-from mahout_samsara_book_spark.cache import release
 from mahout_samsara_book_spark.operators.dedup import (
-    _shingle_sig_fused,
     ingest_batch,
     manifest_batch_ids,
 )
@@ -78,18 +74,6 @@ def run_stream_ingest(
         .parquet(batches_dir)
     )
 
-    # Prebuild each staged file's fused shingle/signature relations
-    # concurrently before the stream starts (round-13, guide §2.6 —
-    # the lifecycle row's same overlap): the build depends only on the
-    # file's text, never on the index, so it is legal to run ahead of
-    # the strictly-sequential index transaction; the builds overlap
-    # stream initialization and each other.  Keyed by file BASENAME
-    # and looked up through ``bdf.inputFiles()`` inside the sink, so a
-    # batch that is not exactly one known staged file just builds
-    # inline — the mapping is verified per epoch, never assumed.
-    # Prebuilds read with the stream's own schema, not an inferred one.
-    staged = sorted(glob.glob(batches_dir + "/*.parquet"), key=os.path.getmtime)
-
     def sink(bdf: DataFrame, epoch_id: int) -> None:
         if bdf.isEmpty():  # trailing empty micro-batch — nothing to ingest
             return
@@ -114,59 +98,25 @@ def run_stream_ingest(
         # the manifest commit and the output write — no later epoch ran
         # (foreachBatch serializes) — so the recomputed probe sees
         # exactly {corpus + earlier batches + own committed rows}, and
-        # the self-row anti-join makes it identical to first-attempt
-        # the probe-output write runs through ingest_batch's
+        # the self-row anti-join makes it identical to first-attempt.
+        # The probe-output write runs through ingest_batch's
         # `materialize` hook, overlapping it with the index append
         # (guide §2.6) — safe in every interleaving because the append
         # is invisible behind the manifest and the probe anti-joins
-        # its own batch ids; epochs stay sequential (foreachBatch)
-        kw = {}
-        in_files = bdf.inputFiles()
-        if len(in_files) == 1:
-            fut = prebuilds.get(os.path.basename(in_files[0]))
-            if fut is not None:
-                kw["_sh"], kw["_sig"] = fut.result()
-        try:
-            ingest_batch(
-                bdf.select("doc_id", "text"), index_path,
-                n=n, k=k, bands=bands, seed=seed, threshold=threshold,
-                batch_id=bid, skip_if_committed=True,
-                materialize=lambda df: df.write.mode("overwrite").parquet(
-                    dst
-                ),
-                **kw,
-            )
-        finally:  # the output is written: this epoch's pair is spent
-            for df in kw.values():
-                release(df)
+        # its own batch ids; epochs stay sequential (foreachBatch).
+        # The batch's shingles are one batch-sized job inside
+        # ingest_batch, held in core for the probe and the append.
+        ingest_batch(
+            bdf.select("doc_id", "text"), index_path,
+            n=n, k=k, bands=bands, seed=seed, threshold=threshold,
+            batch_id=bid, skip_if_committed=True,
+            materialize=lambda df: df.write.mode("overwrite").parquet(dst),
+        )
 
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(staged)))) as pool:
-        prebuilds = {
-            os.path.basename(f): pool.submit(
-                _shingle_sig_fused,
-                spark.read.schema(DOCS_SCHEMA).parquet(f),
-                n, k, seed, "doc_id", "text", materialize=True,
-            )
-            for f in staged
-        }
-        try:
-            q = (
-                src.writeStream.foreachBatch(sink)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination()
-            finally:
-                if q.isActive:  # pragma: no cover — availableNow self-terminates
-                    q.stop()
-        finally:
-            # on every exit: cancel the prebuilds that have not
-            # started, wait for the running ones, and release each
-            # finished pair the sink did not consume
-            pool.shutdown(cancel_futures=True)
-            for fut in prebuilds.values():
-                if not fut.cancelled() and fut.exception() is None:
-                    for df in fut.result():
-                        release(df)
+    q = src.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+    finally:
+        if q.isActive:  # pragma: no cover — availableNow self-terminates
+            q.stop()
     return spark.read.parquet(out_path)

@@ -230,7 +230,7 @@ def test_d_sample_fault_releases_everything(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("materialize", [None, lambda df: df.count()])
-def test_ingest_batch_fault_after_checkpoints_releases_everything(
+def test_ingest_batch_fault_in_append_leaves_nothing_cached(
     spark, monkeypatch, tmp_path, materialize
 ):
     from mahout_samsara_book_spark.operators import dedup
@@ -239,6 +239,7 @@ def test_ingest_batch_fault_after_checkpoints_releases_everything(
     dedup.dedup_index_persist(_docs(spark, CORPUS), path)
     release_tracked(blocking=True)
     before = _persistent_rdds(spark)
+    n0 = len(cache._TRACKED)
     n_ckpt = []
     real_ckpt = dedup.checkpoint
 
@@ -247,13 +248,12 @@ def test_ingest_batch_fault_after_checkpoints_releases_everything(
         return real_ckpt(df)
 
     monkeypatch.setattr(dedup, "checkpoint", counting)
-    monkeypatch.setattr(
-        dedup, "dedup_index_append", _fail_on_call(1, dedup.dedup_index_append)
-    )
+    monkeypatch.setattr(dedup, "_append", _fail_on_call(1, dedup._append))
     with pytest.raises(RuntimeError, match="injected"):
         dedup.ingest_batch(_docs(spark, BATCH), path, materialize=materialize)
-    assert len(n_ckpt) == 2  # the batch shingles and the candidates
-    release_tracked(blocking=True)
+    # the batch shingles and the candidates are held in core
+    assert n_ckpt == []
+    assert len(cache._TRACKED) == n0
     assert _persistent_rdds(spark) <= before
 
 
@@ -334,8 +334,7 @@ def test_stream_ingest_pins_nothing_and_joins_its_threads(
     got = {r["doc_id"]: r["dup_of"] for r in out.collect()}
     assert got == {100: None, 200: 100, 300: None}
 
-    # a fault inside the sink: the prebuild pool is joined and every
-    # prebuilt pair released before the error surfaces
+    # a fault inside the sink: no thread or cache outlives the error
     threads = _threads()
     dedup_index_persist(_docs(spark, CORPUS), f"{root}/idx2")
     n0 = len(cache._TRACKED)

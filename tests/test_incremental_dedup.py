@@ -85,6 +85,70 @@ def test_incremental_persisted_matches_in_session(spark, tmp_path):
     assert rows[101][1] and not rows[102][1] and rows[102][2] == 101
 
 
+def test_shuffled_verify_above_pair_limit_matches_in_core(
+    spark, tmp_path, monkeypatch
+):
+    """Above PAIRS_BCAST_LIMIT the probe verifies over the lazy
+    candidate relation with shuffled joins instead of an in-core pair
+    set; both paths, persisted and in-session, return the same rows —
+    for a batch with keep and dup outcomes and an empty-text doc, and
+    for an empty batch."""
+    from mahout_samsara_book_spark.operators import dedup
+
+    corpus = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog tonight"),
+            (2, "completely unrelated text about spark and parquet files"),
+        ],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [
+            (100, "the quick brown fox jumps over the lazy dog tonight"),
+            (101, "a brand new document with entirely fresh content words"),
+            (102, "a brand new document with entirely fresh content words"),
+            (103, ""),
+        ],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "ddx")
+    dedup.dedup_index_persist(corpus, path)
+    small_pairs = []
+    real_verify = dedup.ngram_jaccard
+
+    def verify(*args, _small_pairs=False, **kw):
+        small_pairs.append(_small_pairs)
+        return real_verify(*args, _small_pairs=_small_pairs, **kw)
+
+    monkeypatch.setattr(dedup, "ngram_jaccard", verify)
+
+    def probes():
+        return [
+            (
+                sorted(map(tuple, dedup.incremental_dedup_persisted(b, path).collect())),
+                sorted(map(tuple, dedup.incremental_dedup(corpus, b).collect())),
+            )
+            for b in (batch, batch.filter("doc_id < 0"))
+        ]
+
+    in_core = probes()
+    assert all(small_pairs)
+    small_pairs.clear()
+    monkeypatch.setattr(dedup, "PAIRS_BCAST_LIMIT", 0)
+    shuffled = probes()
+    # the two non-empty batches had candidates, so they took the
+    # shuffled verify; the empty batches' zero pairs still fit
+    assert small_pairs == [False, False, True, True]
+    assert shuffled == in_core
+    (persisted, session), (empty_p, empty_s) = in_core
+    assert persisted == session
+    assert empty_p == empty_s == []
+    rows = {r[0]: r for r in persisted}
+    assert not rows[100][1] and rows[100][2] == 1
+    assert rows[101][1] and not rows[102][1] and rows[102][2] == 101
+    assert rows[103][1:] == (True, None, None)
+
+
 def test_universe_sample_preserves_joins(spark):
     orders = spark.range(1000).select(F.col("id").alias("o_orderkey"))
     li = spark.range(3000).select((F.col("id") % 1000).alias("l_orderkey"))

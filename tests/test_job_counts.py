@@ -55,5 +55,5 @@ def test_ingest_batch_job_count(spark, tmp_path):
     path = str(tmp_path / "index")
     dedup_index_persist(corpus, path)
     n = _jobs(spark, lambda: ingest_batch(batch, path).collect())
-    # 22 jobs in the caller's group on local[4]
-    assert n <= 24
+    # 17 jobs in the caller's group on local[4]
+    assert n <= 19

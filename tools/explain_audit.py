@@ -927,17 +927,30 @@ def main() -> int:
 
     import entry_m5 as _em9
 
-    # the probe eagerly checkpoints its candidate relation (round-13),
-    # which truncates the final plan at a LogicalRDD — flip the audit
-    # hook so the identical lazy candidate tree (bucket scans, DPP,
-    # pruning) is visible to explain()
+    # the probe collects its candidate pairs when it is built, so its
+    # final plan reads them as a local relation: audit the lazy
+    # candidate plan the probe collects (the dedup module's own
+    # builder, over the same batch and index) plus the probe itself
     from mahout_samsara_book_spark.operators import dedup as _ddmod
+    from mahout_samsara_book_spark.sources.tables import load_table
 
-    _ddmod._LAZY_CAND = True
-    try:
-        p37 = plan_of(_em9.q_dedup_incremental_persisted(spark, sf_dir))
-    finally:
-        _ddmod._LAZY_CAND = False
+    _docs9 = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    _sh9, _sig9 = _ddmod._batch_in_core(
+        _em9._ddx_probe_batch(_docs9), 3, _em9.MINHASH_K, _em9.MINHASH_SEED
+    )
+    _bkt9, _ = _ddmod._index_side(
+        _em9._dedup_index_path(spark, sf_dir), _sh9, "doc_id"
+    )
+    p37_cand = plan_of(
+        _ddmod._candidate_pairs(
+            _bkt9,
+            _ddmod.band_buckets(
+                _sig9, _em9.LSH_BANDS, _em9.MINHASH_K // _em9.LSH_BANDS
+            ),
+            "doc_id",
+        )
+    )
+    p37 = p37_cand + plan_of(_em9.q_dedup_incremental_persisted(spark, sf_dir))
     checks.append(
         (
             "incremental dedup persisted-index probe "
@@ -945,10 +958,9 @@ def main() -> int:
             p37,
             [
                 (
-                    "bucket-index probe is dynamically partition-pruned "
-                    "to the batch's bands (DPP subquery on the band "
-                    "partition column)",
-                    "dynamicpruningexpression(band" in p37,
+                    "the candidate join's batch side is a LocalTableScan "
+                    "(the batch is held in core)",
+                    "LocalTableScan" in p37_cand,
                 ),
                 (
                     "bucket-index scan is column-pruned to (doc_id, sig) "
