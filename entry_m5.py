@@ -2853,6 +2853,15 @@ def _dedup_lifecycle_path(spark: SparkSession, sf_dir: str) -> str:
 DDX_REKEY = 1 << 40
 
 
+def _ddx_append_batch2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch 2 of the two-batch lifecycle: batch 1's texts under fresh
+    ids (+2^40, outside the id domain: ADVICE r10)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.filter(F.col("doc_id") % 50 == 17).select(
+        (F.col("doc_id") + DDX_REKEY).alias("doc_id"), "text"
+    )
+
+
 def q_dedup_incremental_append(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2871,16 +2880,9 @@ def q_dedup_incremental_append(
         incremental_dedup_persisted,
     )
 
-    path = _dedup_lifecycle_path(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    batch2 = docs.filter(F.col("doc_id") % 50 == 17).select(
-        (F.col("doc_id") + DDX_REKEY).alias("doc_id"), "text"
-    )
     out = incremental_dedup_persisted(
-        batch2, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
-        seed=MINHASH_SEED, threshold=0.5,
+        _ddx_append_batch2(spark, sf_dir), _dedup_lifecycle_path(spark, sf_dir),
+        n=3, k=MINHASH_K, bands=LSH_BANDS, seed=MINHASH_SEED, threshold=0.5,
     )
     return out.select(
         "doc_id", "keep", "dup_of", _sci(F.col("jaccard")).alias("jaccard")
@@ -2976,9 +2978,9 @@ def q_dedup_ingest_lifecycle(
     batch 1 (+2^40) — the copies must resolve dup_of to batch-1 ids,
     visible only through batch 1's append; batch 3 = copies of
     batch 2's NEW texts (+2^41) — resolvable only through batch 2's
-    append.  Each probe is ``localCheckpoint``-materialized before the
-    next ingest so it grades the index snapshot its batch actually saw
-    (the lifecycle is inherently sequential — the single-writer
+    append.  Each probe runs inside its ingest_batch call, before the
+    next ingest, so it grades the index snapshot its batch actually
+    saw (the lifecycle is inherently sequential — the single-writer
     contract, dedup.py:ingest_batch).  Each invocation works on a
     FRESH COPY of the build-once pristine index: ingest MUTATES the
     index, and re-appending the same batch would double its shingle
@@ -3017,26 +3019,15 @@ def q_dedup_ingest_lifecycle(
     )
     outs = []
     for i, b in enumerate([b1, b2, b3], start=1):
-        # materialize NOW: the next ingest appends more index rows,
-        # which this batch's probe must not see.  The LAST batch is
-        # checkpointed too (ADVICE r11): it makes the returned
-        # DataFrame self-contained, so the NEXT invocation's rmtree of
-        # this working copy can never invalidate a still-unexecuted
-        # result (the build-N+1-before-execute-N hazard).  The
-        # localCheckpoint runs through ingest_batch's `materialize`
-        # hook, OVERLAPPING the probe's jobs with the append's (guide
-        # §2.6) — per-batch wall ≈ max(probe, append), with the
-        # cross-batch sequencing (single-writer) unchanged because
-        # ingest_batch returns only after both finish.  Each batch's
-        # shingles are one batch-sized job inside ingest_batch.
+        # ingest_batch probes before it appends and returns a local
+        # relation, so each result holds the snapshot its batch saw and
+        # reads nothing from this working copy — the next invocation's
+        # rmtree cannot invalidate it (ADVICE r11)
         outs.append(
             ingest_batch(
                 b, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
                 seed=MINHASH_SEED, threshold=0.5,
-                materialize=lambda df, i=i: df.withColumn(
-                    "batch", F.lit(i).cast("long")
-                ).localCheckpoint(),
-            )
+            ).withColumn("batch", F.lit(i).cast("long"))
         )
     union = outs[0]
     for o in outs[1:]:
@@ -4722,19 +4713,15 @@ def q_dedup_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup_incremental_append's own grading
     shutil.copytree(_dedup_lifecycle_path(spark, sf_dir), path)
     dedup_index_compact(spark, path, bands=LSH_BANDS)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    batch2 = docs.filter(F.col("doc_id") % 50 == 17).select(
-        (F.col("doc_id") + DDX_REKEY).alias("doc_id"), "text"
-    )
+    # the probe result is a local relation: the next invocation's
+    # rmtree of this copy cannot invalidate it
     out = incremental_dedup_persisted(
-        batch2, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
-        seed=MINHASH_SEED, threshold=0.5,
+        _ddx_append_batch2(spark, sf_dir), path, n=3, k=MINHASH_K,
+        bands=LSH_BANDS, seed=MINHASH_SEED, threshold=0.5,
     )
     return out.select(
         "doc_id", "keep", "dup_of", _sci(F.col("jaccard")).alias("jaccard")
-    ).localCheckpoint()
+    )
 
 
 QUERIES["dedup_compact_probe"] = q_dedup_compact_probe

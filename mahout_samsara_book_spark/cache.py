@@ -43,8 +43,8 @@ _TRACKED: list[DataFrame] = []
 # id(checkpoint result) -> the JVM RDD holding its blocks: unpersisting
 # the DataFrame itself is a no-op, it is not in the CacheManager
 _CHECKPOINT_RDDS: dict[int, object] = {}
-# a caller's hook may register from a pool thread (ingest_batch's
-# `materialize` runs beside the append)
+# callers may register from threads other than the main one (a
+# streaming foreachBatch sink runs on a py4j callback thread)
 _LOCK = threading.Lock()
 
 

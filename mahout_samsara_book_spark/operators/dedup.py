@@ -17,6 +17,11 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -106,27 +111,35 @@ def shingle_hashes(
     string allocations at all. The DuckDB oracle replays the identical
     integer math."""
     docs = ensure_min_partitions(docs)
-    toks = tokenize(F.col(text_col))
-    th = F.transform(toks, lambda t: h31(t))
-
-    def gram_hash(i):
-        acc = F.element_at(F.col("th"), i)
-        for j in range(1, n):
-            acc = (acc * F.lit(31) + F.element_at(F.col("th"), i + j)) % F.lit(
-                P31
-            )
-        return acc
-
-    grams = F.when(
-        F.size(F.col("th")) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(F.col("th")) - (n - 1)), gram_hash
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    out = docs.select(F.col(id_col), th.alias("th")).select(
-        F.col(id_col), F.explode(grams).alias("h")
+    out = _token_hashes(docs, id_col, text_col).select(
+        F.col(id_col), F.explode(_gram_hashes(n)).alias("h")
     )
     return out.distinct() if distinct else out
+
+
+def _token_hashes(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id, th)``: each doc's token hashes, projected once so the
+    gram fold below reads a column instead of re-hashing per gram."""
+    return docs.select(
+        F.col(id_col), F.transform(tokenize(F.col(text_col)), h31).alias("th")
+    )
+
+
+def _gram_hashes(n: int):
+    """The array of a doc's n-gram hashes over the ``th`` column of
+    :func:`_token_hashes`; empty for a doc with fewer than n tokens."""
+    th = F.col("th")
+
+    def gram_hash(i):
+        acc = F.element_at(th, i)
+        for j in range(1, n):
+            acc = (acc * F.lit(31) + F.element_at(th, i + j)) % F.lit(P31)
+        return acc
+
+    return F.when(
+        F.size(th) >= n,
+        F.transform(F.sequence(F.lit(1), F.size(th) - (n - 1)), gram_hash),
+    ).otherwise(F.array().cast("array<long>"))
 
 
 def _hashed_shingles(shingle_df: DataFrame, id_col: str) -> DataFrame:
@@ -173,26 +186,83 @@ def _shingle_sig_fused(
     return sh, minhash_signatures(sh, k, seed, id_col)
 
 
+class _InCoreBatch(NamedTuple):
+    """An ingest batch held on the driver as Arrow tables."""
+
+    ids: pa.ChunkedArray  # every batch row's id, in batch order
+    sh: pa.Table  # distinct (id, h) shingle hashes
+    bkt: pa.Table  # (id, band, sig) LSH bucket keys
+
+
 def _batch_in_core(
     batch: DataFrame,
     n: int,
     k: int,
+    bands: int,
     seed: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
-    """(distinct shingle hashes, minhash signatures) of an ingest
-    BATCH, with the shingles held in core: one job derives them and
-    brings them back as Arrow, and they re-enter as a local relation.
-    The batch is bounded by the ingest contract (the reason its
-    buckets and ids broadcast downstream), so every consumer — probe,
-    verify, append — reads a ``LocalRelation`` leaf instead of
-    re-deriving the batch, and nothing is cached or needs releasing.
-    The signatures stay lazy over that relation."""
-    sh = batch.sparkSession.createDataFrame(
-        shingle_hashes(batch, n, id_col, text_col).toArrow()
+) -> _InCoreBatch:
+    """An ingest BATCH derived on the driver.  The batch is bounded by
+    the ingest contract, so ONE Spark job brings back each doc's
+    gram-hash array as Arrow (docs without shingles come back with an
+    empty array, so every id survives), and the rest is batch-sized
+    integer work in pyarrow/numpy, bit-identical to the Spark
+    functions: the distinct ``(id, h)`` rows of :func:`shingle_hashes`,
+    the k affine mins mod P31 of :func:`minhash_signatures` (products
+    stay below 2^62, so int64 is exact) and the ``"_"``-joined decimal
+    band keys of :func:`band_buckets`."""
+    got = _batch_grams(batch, n, id_col, text_col).toArrow()
+    ids = got.column(id_col)
+    hs = got.column("hs").combine_chunks()
+    sh = (
+        pa.table(
+            {
+                id_col: ids.take(pc.list_parent_indices(hs)),
+                "h": pc.list_flatten(hs),
+            }
+        )
+        .group_by([id_col, "h"], use_threads=False)
+        .aggregate([])
     )
-    return sh, minhash_signatures(sh, k, seed, id_col)
+    h = sh.column("h").to_numpy()
+    sig = pa.table(
+        {
+            id_col: sh.column(id_col),
+            **{
+                f"mh_{i}": (a * h + b) % P31
+                for i, (a, b) in enumerate(hash_family(k, seed))
+            },
+        }
+    ).group_by(id_col, use_threads=False).aggregate(
+        [(f"mh_{i}", "min") for i in range(k)]
+    )
+    rows = k // bands
+    bkt = pa.concat_tables([
+        pa.table(
+            {
+                id_col: sig.column(id_col),
+                "band": pa.array(np.full(sig.num_rows, bi, np.int32)),
+                "sig": pc.binary_join_element_wise(
+                    *[
+                        pc.cast(sig.column(f"mh_{bi * rows + r}_min"), pa.string())
+                        for r in range(rows)
+                    ],
+                    "_",
+                ),
+            }
+        )
+        for bi in range(bands)
+    ])
+    return _InCoreBatch(ids, sh, bkt)
+
+
+def _batch_grams(batch: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+    """``(id, hs)``: one row per batch row with its gram-hash array —
+    the one Spark job of :func:`_batch_in_core`."""
+    return _token_hashes(batch, id_col, text_col).select(
+        F.col(id_col), _gram_hashes(n).alias("hs")
+    )
 
 
 def minhash_signatures(
@@ -264,15 +334,14 @@ def ngram_jaccard(
     the shingle relation is ever shuffled. A pair that shares no
     shingle has no row (the oracle's intersect join drops it too).
 
-    ``_small_pairs``: callers whose pair relation is BOUNDED by contract
-    (the incremental probe — pairs ≤ batch × bucket-width) set it to
-    broadcast the candidate ids and the pairs explicitly (guide
-    §3.1/§3.2), so the shingle relation — the 100 TB side — is
-    semi-filtered map-side. Corpus-scale callers (minhash_lsh_dedup et
-    al.) leave it False: their pair stream can exceed broadcast limits,
-    and the shuffled joins are the safe shape."""
+    ``_small_pairs``: the incremental probe's pair set, bounded by the
+    ingest contract and held in core (see :func:`_incremental_match`).
+    Both inputs are then Arrow tables — the candidates' distinct
+    ``(id, h)`` rows and the pairs — and the same Jaccard is computed
+    on the driver, returned as an Arrow table."""
+    if _small_pairs:
+        return _jaccard_in_core(shingle_df, pairs, id_col)
     hs = _hashed_shingles(shingle_df, id_col)
-    maybe_b = F.broadcast if _small_pairs else (lambda df: df)
     ids = (
         pairs.select(F.col("doc_a").alias(id_col))
         .union(pairs.select(F.col("doc_b").alias(id_col)))
@@ -285,7 +354,7 @@ def ngram_jaccard(
     # partitioning, and the two probes below then fail to zip
     # ("Can't zip RDDs with unequal numbers of partitions").
     sets = (
-        hs.join(maybe_b(ids), id_col, "leftsemi")
+        hs.join(ids, id_col, "leftsemi")
         .repartition(id_col)
         .groupBy(id_col)
         .agg(F.collect_set("h").alias("hs"))
@@ -293,7 +362,7 @@ def ngram_jaccard(
     sa = sets.select(F.col(id_col).alias("doc_a"), F.col("hs").alias("hs_a"))
     sb = sets.select(F.col(id_col).alias("doc_b"), F.col("hs").alias("hs_b"))
     return (
-        maybe_b(pairs.select("doc_a", "doc_b"))
+        pairs.select("doc_a", "doc_b")
         .join(sa, "doc_a")
         .join(sb, "doc_b")
         .select(
@@ -313,6 +382,46 @@ def ngram_jaccard(
             ).alias("jaccard"),
         )
     )
+
+
+def _jaccard_in_core(sh: pa.Table, pairs: pa.Table, id_col: str) -> pa.Table:
+    """:func:`ngram_jaccard` over Arrow tables: each pair expands to
+    doc_a's shingle rows (the join the caller bounds by
+    ``VERIFY_ROWS_LIMIT``), those that doc_b also holds count |A∩B|,
+    and the per-doc set sizes finish the ratio as Spark's long
+    division does."""
+    sh = sh.select([id_col, "h"])
+    sz = _count_by(sh, [id_col], "n")
+    inter = _count_by(
+        pairs.join(
+            sh.rename_columns(["doc_a", "h"]), "doc_a", join_type="inner"
+        ).join(
+            sh.rename_columns(["doc_b", "h"]), ["doc_b", "h"],
+            join_type="left semi",
+        ),
+        ["doc_a", "doc_b"],
+        "inter",
+    )
+    for side in ("a", "b"):
+        inter = inter.join(
+            sz.rename_columns([f"doc_{side}", f"sz_{side}"]), f"doc_{side}",
+            join_type="inner",
+        )
+    i = inter.column("inter").to_numpy()
+    union = inter.column("sz_a").to_numpy() + inter.column("sz_b").to_numpy() - i
+    return pa.table(
+        {
+            "doc_a": inter.column("doc_a"),
+            "doc_b": inter.column("doc_b"),
+            "jaccard": i.astype(np.float64) / union.astype(np.float64),
+        }
+    )
+
+
+def _count_by(t: pa.Table, keys: list[str], name: str) -> pa.Table:
+    """``(keys..., name)``: the row count of each distinct key."""
+    g = t.group_by(keys, use_threads=False).aggregate([([], "count_all")])
+    return pa.table({**{c: g.column(c) for c in keys}, name: g.column("count_all")})
 
 
 def minhash_lsh_dedup(
@@ -776,107 +885,263 @@ def incremental_dedup(
     index this join probes (id, band, sig — exactly what this function
     materializes); the Jaccard verify then touches only candidate
     shingle slices (see ngram_jaccard's semi-filter discipline).
-    Corpus and batch ids must be disjoint."""
-    rows = k // bands
+    Corpus and batch ids must be disjoint.  The batch is held in core
+    (:func:`_batch_in_core`); the corpus side stays lazy, so the probe
+    and the candidates' shingle fetch each derive it (the persisted
+    index, :func:`incremental_dedup_persisted`, is the shape that
+    derives it once)."""
     # fused corpus build: one hash(id) exchange instead of three (see
-    # _shingle_sig_fused); the bounded batch side is held in core
+    # _shingle_sig_fused)
     sh_c, sig_c = _shingle_sig_fused(corpus, n, k, seed, id_col, text_col)
-    sh_b, sig_b = _batch_in_core(batch, n, k, seed, id_col, text_col)
-    bkt_c = band_buckets(sig_c, bands, rows, id_col)
-    bkt_b = band_buckets(sig_b, bands, rows, id_col)
     return _incremental_match(
-        batch, bkt_c, bkt_b, sh_c, sh_b, threshold, id_col
+        batch.sparkSession,
+        _batch_in_core(batch, n, k, bands, seed, id_col, text_col),
+        band_buckets(sig_c, bands, k // bands, id_col),
+        sh_c,
+        threshold,
+        id_col,
     )
 
 
-# candidate-pair count at or below which the incremental verify's
-# relations (pairs, candidate-id set) broadcast explicitly — ~32 MB of
-# packed pair longs at the limit; above it the shuffled semi-join shape
-# is the scale-safe fallback (ADVICE r12)
+# candidate rows (cross-arm rows, one per shared bucket, plus
+# within-batch pairs) at or below which the incremental probe holds its
+# pairs in core — ~32 MB of pair longs at the limit; above it the
+# shuffled verify is the scale-safe fallback (ADVICE r12)
 PAIRS_BCAST_LIMIT = 2_000_000
+
+# bound on the rows the in-core verify joins: the candidates' shingle
+# rows fetched from the index, and the (doc_a, doc_b, h) rows the pairs
+# expand to — ≤ 48 MB of int64 columns at the limit; above it the
+# shuffled verify runs instead
+VERIFY_ROWS_LIMIT = 2_000_000
+
+
+def _cross_arm(bkt_b: DataFrame, bkt_c: DataFrame, id_col: str) -> DataFrame:
+    """``(doc_a, doc_b)`` rows whose batch bucket key (doc_b) meets a
+    corpus/index bucket (doc_a), one per shared bucket.  The BATCH
+    side is broadcast explicitly (guide §3.1): it is batch-bounded
+    (≤ bands rows per batch doc) by the ingest contract, while bkt_c
+    is the INDEX — the side that must never shuffle at 100 TB.  The
+    planner's size estimates pick the right side at fixture scale but
+    invert at real scale; the hint pins the probe-the-index-with-the-
+    batch shape."""
+    return (
+        F.broadcast(bkt_b.select(F.col(id_col).alias("doc_b"), "band", "sig"))
+        .join(
+            bkt_c.select(F.col(id_col).alias("doc_a"), "band", "sig"),
+            ["band", "sig"],
+        )
+        .select("doc_a", "doc_b")
+    )
+
+
+def _index_shingles(sh_c: DataFrame, ids: DataFrame, id_col: str) -> DataFrame:
+    """The ``(id, h)`` rows of the index docs in ``ids`` (a batch-bounded
+    relation, broadcast like the batch keys of :func:`_cross_arm`)."""
+    return sh_c.join(F.broadcast(ids), id_col, "leftsemi")
 
 
 def _candidate_pairs(
     bkt_c: DataFrame, bkt_b: DataFrame, id_col: str
 ) -> DataFrame:
-    """The lazy candidate plan of the incremental probe: distinct
+    """The lazy candidate plan of the shuffled verify: distinct
     ``(doc_a, doc_b)`` pairs whose batch bucket key (doc_b) meets a
-    corpus bucket or an EARLIER batch doc's bucket.  Corpus docs are
-    always the existing side regardless of id order; batch-batch pairs
-    defer to the smaller id.  The BATCH bucket relation is broadcast
-    explicitly (guide §3.1): it is batch-bounded (≤ bands rows per
-    batch doc) by the ingest contract, while bkt_c is the INDEX — the
-    side that must never shuffle at 100 TB.  The planner's size
-    estimates pick the right side at fixture scale but invert at real
-    scale; the hint pins the probe-the-index-with-the-batch shape."""
+    corpus bucket (:func:`_cross_arm`) or an EARLIER batch doc's
+    bucket.  Corpus docs are always the existing side regardless of id
+    order; batch-batch pairs defer to the smaller id."""
     newer = bkt_b.select(F.col(id_col).alias("doc_b"), "band", "sig")
-    cross = F.broadcast(newer).join(
-        bkt_c.select(F.col(id_col).alias("doc_a"), "band", "sig"),
-        ["band", "sig"],
-    )
     within = newer.join(
         F.broadcast(
             bkt_b.select(F.col(id_col).alias("doc_a"), "band", "sig")
         ),
         ["band", "sig"],
     ).filter(F.col("doc_a") < F.col("doc_b"))
-    return cross.unionByName(within).select("doc_a", "doc_b").distinct()
+    return (
+        _cross_arm(bkt_b, bkt_c, id_col)
+        .unionByName(within.select("doc_a", "doc_b"))
+        .distinct()
+    )
 
 
 def _incremental_match(
-    batch: DataFrame,
+    spark,
+    b: _InCoreBatch,
     bkt_c: DataFrame,
-    bkt_b: DataFrame,
     sh_c: DataFrame,
-    sh_b: DataFrame,
     threshold: float,
     id_col: str,
 ) -> DataFrame:
     """Shared match core of :func:`incremental_dedup` /
-    :func:`incremental_dedup_persisted`: probe batch bucket keys against
-    corpus ∪ earlier-batch buckets, Jaccard-verify candidates, pick the
-    best match per batch doc.
+    :func:`incremental_dedup_persisted`: probe the batch's bucket keys
+    against the corpus/index buckets and the earlier batch docs',
+    Jaccard-verify the candidates, pick the best match per batch doc
+    (highest Jaccard, ties to the lowest id).  Spark only scans the
+    big side; everything batch-sized runs on the driver:
 
-    The candidate relation feeds the verify twice (the candidate-id
-    semi filter + the pair probe of the per-doc hash sets).  ONE job
-    collects at most ``PAIRS_BCAST_LIMIT + 1`` pairs: when they fit,
-    they re-enter as a local relation the verify broadcasts; above the
-    limit the lazy relation feeds the scale-safe shuffled verify
+    1. the candidate probe — ONE job, the batch keys broadcast against
+       bkt_c, collecting at most ``PAIRS_BCAST_LIMIT + 1`` rows; the
+       within-batch arm and the pair distinct run in pyarrow;
+    2. the candidates' index shingles — ONE broadcast semi-join job;
+    3. the Jaccard (:func:`ngram_jaccard` in core), the threshold and
+       the best match, in pyarrow/numpy.
+
+    Above ``PAIRS_BCAST_LIMIT`` pairs or ``VERIFY_ROWS_LIMIT`` verify
+    rows the lazy candidate plan feeds the shuffled verify instead
     (ADVICE r12: pairs are batch × bucket-width, and bucket width on
     the index side is unbounded for a hot band signature in a
     near-dup-heavy corpus — the driver never holds more than the
-    limit)."""
-    cand = _candidate_pairs(bkt_c, bkt_b, id_col)
-    head = cand.limit(PAIRS_BCAST_LIMIT + 1).toArrow()
-    small = head.num_rows <= PAIRS_BCAST_LIMIT
-    if small:
-        cand = batch.sparkSession.createDataFrame(head)
-    sh_all = sh_c.unionByName(sh_b)
-    verified = ngram_jaccard(sh_all, cand, id_col, _small_pairs=small).filter(
-        F.col("jaccard") >= F.lit(threshold)
-    )
-    # best match per batch doc: highest Jaccard, ties to the lowest id
-    best = (
-        verified.groupBy("doc_b")
-        .agg(F.min(F.struct((-F.col("jaccard")).alias("neg_j"), "doc_a")).alias("m"))
-        .select(
-            F.col("doc_b").alias(id_col),
-            F.col("m.doc_a").alias("dup_of"),
-            (-F.col("m.neg_j")).alias("jaccard"),
+    limits); only its best matches (≤ one row per batch doc) come
+    back.  Either way the result is a local relation: executing it
+    reads nothing, so it is the same before and after an append."""
+    best = None
+    cand = _pairs_in_core(spark, b, bkt_c, id_col)
+    if cand is not None:
+        pairs, index_ids = cand
+        sh = _candidate_shingles(spark, b, sh_c, pairs, index_ids, id_col)
+        if sh is not None:
+            best = _best_in_core(
+                ngram_jaccard(sh, pairs, id_col, _small_pairs=True),
+                threshold,
+                id_col,
+            )
+    if best is None:
+        verified = ngram_jaccard(
+            sh_c.unionByName(spark.createDataFrame(b.sh)),
+            _candidate_pairs(bkt_c, spark.createDataFrame(b.bkt), id_col),
+            id_col,
+        ).filter(F.col("jaccard") >= F.lit(threshold))
+        best = (
+            verified.groupBy("doc_b")
+            .agg(
+                F.min(
+                    F.struct((-F.col("jaccard")).alias("neg_j"), "doc_a")
+                ).alias("m")
+            )
+            .select(
+                F.col("doc_b").alias(id_col),
+                F.col("m.doc_a").alias("dup_of"),
+                (-F.col("m.neg_j")).alias("jaccard"),
+            )
+            .toArrow()
         )
+    return _attach(spark, b.ids, best, id_col)
+
+
+def _pairs_in_core(spark, b: _InCoreBatch, bkt_c: DataFrame, id_col: str):
+    """(distinct candidate pairs, the index ids among them) in core, or
+    None when the pairs exceed ``PAIRS_BCAST_LIMIT``.  The cross arm is
+    one Spark job (:func:`_cross_arm`, capped at the limit + 1 rows);
+    the within-batch arm is counted from the bucket-key group sizes
+    before pyarrow joins it, so the driver never holds more."""
+    t = b.ids.type
+    newer = b.bkt.select([id_col, "band", "sig"]).rename_columns(
+        ["doc_b", "band", "sig"]
     )
-    # `best` is batch-bounded (≤ one row per batch doc) by the ingest
-    # contract — broadcasting it turns the final attach into a
-    # BroadcastHashJoin LeftOuter, so the batch side is never shuffled
-    # or sorted for it (guide §3.1; was SortMergeJoin + an Exchange +
-    # Sort of the batch relation).  The big/index side was never here.
-    return batch.select(id_col).join(
-        F.broadcast(best), id_col, "left"
-    ).select(
-        id_col,
-        F.col("dup_of").isNull().alias("keep"),
-        "dup_of",
-        "jaccard",
+    pair_schema = pa.schema([("doc_a", t), ("doc_b", t)])
+    cross = pair_schema.empty_table()
+    if newer.num_rows:
+        cross = (
+            _cross_arm(spark.createDataFrame(b.bkt), bkt_c, id_col)
+            .limit(PAIRS_BCAST_LIMIT + 1)
+            .toArrow()
+            .cast(pair_schema)
+        )
+    c = _count_by(newer, ["band", "sig"], "c").column("c").to_numpy()
+    if cross.num_rows + int((c * (c - 1) // 2).sum()) > PAIRS_BCAST_LIMIT:
+        return None
+    within = newer.join(
+        newer.rename_columns(["doc_a", "band", "sig"]), ["band", "sig"],
+        join_type="inner",
+    )
+    within = within.filter(
+        pc.less(within.column("doc_a"), within.column("doc_b"))
+    ).select(["doc_a", "doc_b"])
+    pairs = (
+        pa.concat_tables([cross, within.cast(pair_schema)])
+        .group_by(["doc_a", "doc_b"], use_threads=False)
+        .aggregate([])
+        .select(["doc_a", "doc_b"])
+    )
+    return pairs, pc.unique(cross.column("doc_a"))
+
+
+def _candidate_shingles(
+    spark,
+    b: _InCoreBatch,
+    sh_c: DataFrame,
+    pairs: pa.Table,
+    index_ids: pa.Array,
+    id_col: str,
+):
+    """The distinct ``(id, h)`` rows of every candidate — the batch's
+    from core, the index docs' from ONE broadcast semi-join job — or
+    None when the in-core verify would exceed ``VERIFY_ROWS_LIMIT``
+    rows (fetched, or pair-expanded in :func:`_jaccard_in_core`)."""
+    fetched = b.sh.schema.empty_table()
+    if len(index_ids):
+        fetched = (
+            _index_shingles(
+                sh_c, spark.createDataFrame(pa.table({id_col: index_ids})), id_col
+            )
+            .limit(VERIFY_ROWS_LIMIT + 1)
+            .toArrow()
+        )
+        if fetched.num_rows > VERIFY_ROWS_LIMIT:
+            return None
+        fetched = fetched.select([id_col, "h"]).cast(b.sh.schema)
+    sh = pa.concat_tables([b.sh, fetched])
+    expand = pairs.join(
+        _count_by(sh, [id_col], "n").rename_columns(["doc_a", "n"]),
+        "doc_a",
+        join_type="inner",
+    )
+    if (pc.sum(expand.column("n")).as_py() or 0) > VERIFY_ROWS_LIMIT:
+        return None
+    return sh
+
+
+def _best_in_core(verified: pa.Table, threshold: float, id_col: str) -> pa.Table:
+    """``(id, dup_of, jaccard)``: per batch doc (doc_b) the verified
+    pair at or above ``threshold`` with the highest Jaccard, ties to the
+    lowest doc_a."""
+    v = verified.filter(
+        pc.greater_equal(verified.column("jaccard"), threshold)
+    ).sort_by(
+        [("doc_b", "ascending"), ("jaccard", "descending"), ("doc_a", "ascending")]
+    )
+    doc_b = v.column("doc_b").combine_chunks()
+    first = np.ones(v.num_rows, bool)
+    first[1:] = pc.not_equal(doc_b[1:], doc_b[:-1]).to_numpy(zero_copy_only=False)
+    v = v.filter(first)
+    return pa.table(
+        {
+            id_col: v.column("doc_b"),
+            "dup_of": v.column("doc_a"),
+            "jaccard": v.column("jaccard"),
+        }
+    )
+
+
+def _attach(spark, ids: pa.ChunkedArray, best: pa.Table, id_col: str) -> DataFrame:
+    """The probe result ``(id, keep, dup_of, jaccard)`` as a local
+    relation: one row per batch row, in batch order; a doc without a
+    verified match keeps itself."""
+    ids = ids.combine_chunks()
+    at = pc.index_in(ids, value_set=best.column(id_col).combine_chunks())
+    dup_of = best.column("dup_of").combine_chunks().take(at)
+    return spark.createDataFrame(
+        pa.table(
+            [ids, pc.is_null(dup_of), dup_of,
+             best.column("jaccard").combine_chunks().take(at)],
+            schema=pa.schema(
+                [
+                    (id_col, ids.type),
+                    pa.field("keep", pa.bool_(), nullable=False),
+                    ("dup_of", dup_of.type),
+                    ("jaccard", pa.float64()),
+                ]
+            ),
+        ),
     )
 
 
@@ -1235,15 +1500,15 @@ def dedup_index_append(
     probe/append pair is the full crawl-ingest loop, and consecutive
     batches dedup against each other without any re-clustering.
 
-    Cost is batch-proportional: the batch is shingled/minhashed once
-    (:func:`ingest_batch` instead hands its in-core batch to the same
-    append core, so an ingest step derives the batch once) and
-    the writes land ONLY in the batch's ``band=...`` partitions
-    (dynamic partition append — untouched bands gain no files).
-    Probe/append ordering is a non-issue: the probe anti-joins the
-    index against the batch's own ids (parquet listings are taken at
-    execution, so "create the probe first" would NOT hide the appended
-    rows — measured, not assumed).
+    Cost is batch-proportional: the batch is derived in core once
+    (:func:`_batch_in_core`; :func:`ingest_batch` shares it between its
+    probe and its append) and the writes land ONLY in the batch's
+    ``band=...`` partitions — one bucket file per band and one shingle
+    file per append, whatever the core count (untouched bands gain no
+    files).  Probe/append ordering is a non-issue: the probe anti-joins
+    the index against the batch's own ids (parquet listings are taken
+    at execution, so "create the probe first" would NOT hide the
+    appended rows — measured, not assumed).
 
     Failure atomicity (VERDICT r11 item 3 — manifest commit): every
     data row carries this append's ``batch_id`` (a fresh uuid unless
@@ -1269,53 +1534,49 @@ def dedup_index_append(
     batch sees everything COMMITTED before it", so serialize ingest
     (the crawl-pipeline shape this models); shard the corpus into
     per-writer indexes if parallel ingest is required."""
-    sh_b = shingle_hashes(batch, n, id_col, text_col)
     return _append(
-        sh_b, minhash_signatures(sh_b, k, seed, id_col), path, bands,
-        k // bands, id_col, batch_id, _crash_point,
+        batch.sparkSession,
+        _batch_in_core(batch, n, k, bands, seed, id_col, text_col),
+        path, id_col, batch_id, _crash_point,
     )
 
 
 def _append(
-    sh_b: DataFrame,
-    sig_b: DataFrame,
+    spark,
+    b: _InCoreBatch,
     path: str,
-    bands: int,
-    rows: int,
     id_col: str,
     batch_id: str | None,
     _crash_point: str | None = None,
 ) -> str:
-    """The append core of :func:`dedup_index_append` over the batch's
-    shingle/signature relations: both data writes, then the manifest
-    commit.  Returns the committed batch_id."""
+    """The append core of :func:`dedup_index_append` over an in-core
+    batch: both data writes, then the manifest commit.  Returns the
+    committed batch_id."""
     import uuid
 
-    _assert_index_id_type(sh_b, id_col)
+    sh, bkt = spark.createDataFrame(b.sh), spark.createDataFrame(b.bkt)
+    _assert_index_id_type(sh, id_col)
     if batch_id is None:
         batch_id = uuid.uuid4().hex
-    bkt = band_buckets(sig_b, bands, rows, id_col)
-    # repartition by band before the dynamic-partition append: without
-    # it every append lands numShufflePartitions × bands small files
-    # (256 per batch at the default 32), and a long-lived index decays
-    # into a small-files swamp the probes pay for on every listing.
-    # One narrow extra shuffle per batch buys exactly `bands` files
-    # per append — the 100 TB small-files discipline.  batch_id is a
-    # PARTITION column on both tables: probes take it from directory
-    # names (zero bytes read per row, ReadSchema untouched) and the
-    # manifest semi-join prunes uncommitted batches at FILE level; the
-    # trade is one directory per (band, batch) — a long-lived index
-    # compacts old batches into the corpus partition periodically,
-    # which also drops any crashed-append orphans.
+    # ONE task per write: a local relation is sliced defaultParallelism
+    # ways, and every slice would land its own file (a long-lived index
+    # decays into a small-files swamp the probes pay for on every
+    # listing).  The writer sorts the single task's rows by the
+    # partition columns, so each append lands one shingle file and one
+    # bucket file per band.  batch_id is a PARTITION column on both
+    # tables: probes take it from directory names (zero bytes read per
+    # row, ReadSchema untouched) and the manifest filter prunes
+    # uncommitted batches at FILE level; the trade is one directory per
+    # (band, batch) — a long-lived index compacts old batches into one
+    # generation periodically, which also drops any crashed-append
+    # orphans.
     def _write_buckets() -> None:
-        bkt.withColumn("batch_id", F.lit(batch_id)).repartition(
-            bands, "band"
-        ).write.mode("append").partitionBy("band", "batch_id").parquet(
-            path + "/buckets"
-        )
+        bkt.withColumn("batch_id", F.lit(batch_id)).coalesce(1).write.mode(
+            "append"
+        ).partitionBy("band", "batch_id").parquet(path + "/buckets")
 
     def _write_shingles() -> None:
-        sh_b.withColumn("batch_id", F.lit(batch_id)).write.mode(
+        sh.withColumn("batch_id", F.lit(batch_id)).coalesce(1).write.mode(
             "append"
         ).partitionBy("batch_id").parquet(path + "/shingles")
 
@@ -1328,14 +1589,14 @@ def _append(
         if _crash_point == "after_shingles":
             raise RuntimeError("injected crash: after_shingles")
     else:
-        # The two data writes are INDEPENDENT jobs over the shared
-        # batch relations, and neither is visible to probes
-        # until the manifest row lands — so they overlap.  Write order
-        # stopped being a safety property when the manifest became
-        # the commit marker (VERDICT r11 item 3): any interleaving of
-        # a crash leaves the batch invisible-by-manifest.
+        # The two data writes are INDEPENDENT jobs over the in-core
+        # batch, and neither is visible to probes until the manifest
+        # row lands — so they overlap.  Write order stopped being a
+        # safety property when the manifest became the commit marker
+        # (VERDICT r11 item 3): any interleaving of a crash leaves the
+        # batch invisible-by-manifest.
         _write_both(_write_buckets, _write_shingles)
-    _manifest_commit(sh_b.sparkSession, path, batch_id)
+    _manifest_commit(spark, path, batch_id)
     return batch_id
 
 
@@ -1355,25 +1616,17 @@ def ingest_batch(
 ) -> DataFrame:
     """One full crawl-ingest step against a persisted index: probe the
     batch (:func:`incremental_dedup_persisted`), then append its rows
-    (:func:`dedup_index_append`) so later batches see it.  The probe
-    excludes the batch's own appended rows by anti-joining on the
-    batch ids (see incremental_dedup_persisted), so it is safe to
-    execute the returned DataFrame before OR after the append runs;
-    within-batch pairs are handled by the probe's own batch-batch arm
-    (min-id-wins).
+    (:func:`dedup_index_append`) so later batches see it.  The batch is
+    derived in core ONCE and shared by the probe and the append.  The
+    probe runs when this is called and returns a local relation
+    (:func:`_incremental_match`), so executing the returned DataFrame
+    reads nothing from the index; within-batch pairs are handled by the
+    probe's own batch-batch arm (min-id-wins).
 
-    ``materialize`` (round-12, guide §2.6): an optional callable
-    ``DataFrame -> Any`` that EXECUTES the probe result (e.g.
-    ``lambda df: df.localCheckpoint()`` or a parquet write).  When
-    given, it runs in a driver thread CONCURRENTLY with the append's
-    jobs — probe and append are independent by the self-row anti-join
-    (above) and by the manifest protocol (the append is invisible to
-    any probe until its manifest row lands, which happens strictly
-    after both data writes), so overlapping them cuts the ingest wall
-    to ~max(probe, append) instead of their sum, and ingest_batch
-    returns only after BOTH finish (the sequential single-writer
-    contract across batches is untouched).  Returns ``materialize``'s
-    result instead of the lazy DataFrame.
+    ``materialize``: an optional callable ``DataFrame -> Any`` applied
+    to the probe result after the append (e.g. a parquet write of the
+    result); ingest_batch then returns its result instead of the
+    DataFrame.
 
     EXACTLY-ONCE under retries (round 12): with a caller-supplied
     deterministic ``batch_id`` and ``skip_if_committed=True``, a
@@ -1397,43 +1650,21 @@ def ingest_batch(
     other" (see :func:`dedup_index_append` for the full contract and
     the failed-append recovery rule).  Tested in
     tests/test_incremental_dedup.py."""
-    # shingle the batch ONCE for the whole ingest step and hold it in
-    # core: the probe consumes both relations (buckets for candidates,
-    # shingles for the Jaccard verify) and the append writes both, all
-    # reading the same local relation (guide §1.2: remove work before
-    # tuning it).  Nothing is cached, so nothing needs releasing.
-    sh_b, sig_b = _batch_in_core(batch, n, k, seed, id_col, text_col)
-    out = _persisted_match(
-        batch, path, sh_b, sig_b, bands, k // bands, threshold, id_col
+    spark = batch.sparkSession
+    b = _batch_in_core(batch, n, k, bands, seed, id_col, text_col)
+    out = _incremental_match(
+        spark, b, *_index_side(spark, path, b, id_col), threshold, id_col
     )
     # driver-side metadata read (manifest_batch_ids) — the previous
     # limit(1).count() ran a Spark job per re-delivery check
     committed = (
         skip_if_committed
         and batch_id is not None
-        and batch_id in manifest_batch_ids(batch.sparkSession, path)
+        and batch_id in manifest_batch_ids(spark, path)
     )
-
-    def append() -> None:
-        _append(sh_b, sig_b, path, bands, k // bands, id_col, batch_id)
-
-    if materialize is None:
-        if not committed:
-            append()
-        return out
-    if committed:
-        return materialize(out)
-    # overlap the probe's materialization with the append (see
-    # docstring); the probe's committed-id set was bound driver-side
-    # when the plan was built above, and the append's rows stay
-    # invisible behind the manifest until after both writes — either
-    # completion order computes the identical snapshot answer.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(materialize, out)
-        append()
-    return fut.result()
+    if not committed:
+        _append(spark, b, path, id_col, batch_id)
+    return out if materialize is None else materialize(out)
 
 
 def incremental_dedup_persisted(
@@ -1448,61 +1679,41 @@ def incremental_dedup_persisted(
     text_col: str = "text",
 ) -> DataFrame:
     """:func:`incremental_dedup` against a PERSISTED index (see
-    :func:`dedup_index_persist`): only the BATCH is shingled/minhashed;
-    the corpus side is two parquet probes (buckets for candidate
-    generation, shingles for Jaccard verification).  Result is
-    identical to the in-session build with the same parameters (the
-    index content is deterministic), so the two share an oracle.
-
-    The batch is held in core (:func:`_batch_in_core`): one job
-    derives its shingles, and the probe's bucket join, verify and
-    final attach all read the local relation."""
-    sh_b, sig_b = _batch_in_core(batch, n, k, seed, id_col, text_col)
-    return _persisted_match(
-        batch, path, sh_b, sig_b, bands, k // bands, threshold, id_col
-    )
-
-
-def _persisted_match(
-    batch: DataFrame,
-    path: str,
-    sh_b: DataFrame,
-    sig_b: DataFrame,
-    bands: int,
-    rows: int,
-    threshold: float,
-    id_col: str,
-) -> DataFrame:
-    """The probe of :func:`incremental_dedup_persisted` over the batch's
-    shingle/signature relations."""
-    bkt_c, sh_c = _index_side(path, sh_b, id_col)
+    :func:`dedup_index_persist`): only the BATCH is shingled/minhashed,
+    in core (:func:`_batch_in_core`); the index side is two parquet
+    probes (buckets for candidate generation, shingles for the Jaccard
+    verify).  Result is identical to the in-session build with the
+    same parameters (the index content is deterministic), so the two
+    share an oracle.  The probe runs when this is called; the result is
+    a local relation."""
+    spark = batch.sparkSession
+    b = _batch_in_core(batch, n, k, bands, seed, id_col, text_col)
     return _incremental_match(
-        batch, bkt_c, band_buckets(sig_b, bands, rows, id_col), sh_c, sh_b,
-        threshold, id_col,
+        spark, b, *_index_side(spark, path, b, id_col), threshold, id_col
     )
 
 
 def _index_side(
-    path: str, sh_b: DataFrame, id_col: str
+    spark, path: str, b: _InCoreBatch, id_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """(buckets, shingles) of the index at ``path`` that a batch probes.
 
-    COMMITTED rows only (manifest semi-join, VERDICT r11 item 3) — a
+    COMMITTED rows only (manifest filter, VERDICT r11 item 3) — a
     crashed append's orphan rows never reach the probe.  Beyond that,
     the index may ALREADY hold this batch's own committed rows (the
     parquet reader lists files at execution, not at DataFrame creation
     — re-probing after an append, or any probe/append race, would
-    otherwise self-match every doc and double its shingle set in the
-    Jaccard verify).  Batch and index ids are disjoint by the ingest
-    contract, so a broadcast anti-join on the batch's ids strips
-    exactly the self-rows and nothing else.  The ids come from the
-    batch's shingles: a doc without shingles has no index rows."""
-    own = F.broadcast(sh_b.select(id_col).distinct())
-    bkt_all, sh_all = committed_index_tables(sh_b.sparkSession, path, id_col)
-    return (
-        bkt_all.join(own, id_col, "left_anti"),
-        sh_all.join(own, id_col, "left_anti"),
-    )
+    otherwise self-match every doc).  Batch and index ids are disjoint
+    by the ingest contract, so a broadcast anti-join of the BUCKETS on
+    the batch's ids strips exactly the self-rows and nothing else; the
+    ids are the in-core batch's distinct shingle ids (a doc without
+    shingles has no index rows).  The shingles need no such guard:
+    the in-core verify fetches index candidates only, and the shuffled
+    verify collects each doc's shingles into a set, where a batch's
+    own committed rows repeat rows it already has."""
+    own = spark.createDataFrame(pa.table({id_col: pc.unique(b.sh.column(id_col))}))
+    bkt_all, sh_all = committed_index_tables(spark, path, id_col)
+    return bkt_all.join(F.broadcast(own), id_col, "left_anti"), sh_all
 
 
 def connected_components_lsls(

@@ -99,13 +99,10 @@ def run_stream_ingest(
         # (foreachBatch serializes) — so the recomputed probe sees
         # exactly {corpus + earlier batches + own committed rows}, and
         # the self-row anti-join makes it identical to first-attempt.
-        # The probe-output write runs through ingest_batch's
-        # `materialize` hook, overlapping it with the index append
-        # (guide §2.6) — safe in every interleaving because the append
-        # is invisible behind the manifest and the probe anti-joins
-        # its own batch ids; epochs stay sequential (foreachBatch).
-        # The batch's shingles are one batch-sized job inside
-        # ingest_batch, held in core for the probe and the append.
+        # ingest_batch probes the index in core before its append and
+        # returns the result as a local relation; the `materialize`
+        # hook writes it once the append has committed.  Epochs stay
+        # sequential (foreachBatch).
         ingest_batch(
             bdf.select("doc_id", "text"), index_path,
             n=n, k=k, bands=bands, seed=seed, threshold=threshold,

@@ -591,3 +591,153 @@ def test_incremental_equal_jaccard_tie_goes_to_lowest_id(spark):
     batch = spark.createDataFrame([(100, text)], "doc_id long, text string")
     (row,) = incremental_dedup(corpus, batch).collect()
     assert not row["keep"] and row["dup_of"] == 3 and row["jaccard"] == 1.0
+
+
+def _random_batch(spark, seed: int, n_docs: int = 60, first_id: int = 500):
+    """Docs over a 12-word vocabulary (near-dups are common), plus an
+    empty text, a two-token text and a repeated text."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(12)]
+    rows = [
+        (first_id + i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 25))))
+        for i in range(n_docs)
+    ]
+    rows += [
+        (first_id + n_docs, ""),
+        (first_id + n_docs + 1, "w1 w2"),
+        (first_id + n_docs + 2, rows[0][1]),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_in_core_band_keys_match_spark_functions(spark):
+    """The driver-side shingles and band keys of an ingest batch equal
+    the Spark functions' rows, for k divisible by bands and not."""
+    from mahout_samsara_book_spark.operators import dedup
+
+    batch = _random_batch(spark, seed=3)
+    for n, k, bands, seed in [(3, 16, 8, 7), (2, 12, 4, 11), (3, 10, 3, 5)]:
+        b = dedup._batch_in_core(batch, n, k, bands, seed)
+        sh = dedup.shingle_hashes(batch, n)
+        want_bkt = dedup.band_buckets(
+            dedup.minhash_signatures(sh, k, seed), bands, k // bands
+        )
+        assert sorted(zip(*b.sh.to_pydict().values())) == sorted(
+            map(tuple, sh.collect())
+        )
+        assert sorted(zip(*b.bkt.to_pydict().values())) == sorted(
+            map(tuple, want_bkt.select("doc_id", "band", "sig").collect())
+        )
+        assert sorted(b.ids.to_pylist()) == sorted(
+            r[0] for r in batch.select("doc_id").collect()
+        )
+
+
+def test_in_core_jaccard_matches_shuffled_verify(spark):
+    """ngram_jaccard's in-core engine gives the shuffled engine's rows
+    bit for bit; a pair that shares no shingle has no row in either."""
+    import random
+
+    import pyarrow as pa
+
+    from mahout_samsara_book_spark.operators.dedup import ngram_jaccard
+
+    rng = random.Random(9)
+    sets = {d: {rng.randrange(40) for _ in range(rng.randint(1, 15))} for d in range(30)}
+    sets[100], sets[101] = {1, 2, 3}, {4, 5}  # disjoint
+    sh_rows = sorted((d, h) for d, hs in sets.items() for h in hs)
+    pair_rows = sorted(
+        {(a, b) for a in range(30) for b in range(30) if a < b and rng.random() < 0.2}
+        | {(100, 101)}
+    )
+    got = ngram_jaccard(
+        pa.table({"doc_id": [r[0] for r in sh_rows], "h": [r[1] for r in sh_rows]}),
+        pa.table({"doc_a": [p[0] for p in pair_rows], "doc_b": [p[1] for p in pair_rows]}),
+        _small_pairs=True,
+    )
+    want = ngram_jaccard(
+        spark.createDataFrame(sh_rows, "doc_id long, h long"),
+        spark.createDataFrame(pair_rows, "doc_a long, doc_b long"),
+    )
+    got_rows = sorted(zip(*got.to_pydict().values()))
+    assert got_rows == sorted(map(tuple, want.collect()))
+    assert (100, 101) not in {r[:2] for r in got_rows}
+    assert got_rows  # the random pairs do overlap
+
+
+def test_in_core_probe_edge_cases(spark, tmp_path, monkeypatch):
+    """The in-core verify (no shuffled fallback taken) on an empty
+    batch, a batch of docs shorter than n tokens, an equal-Jaccard tie,
+    a re-probe after the append and a skip_if_committed re-delivery."""
+    from mahout_samsara_book_spark.operators import dedup
+
+    text = "the quick brown fox jumps over the lazy dog tonight"
+    corpus = spark.createDataFrame(
+        [(7, text), (3, text), (5, "completely unrelated text about spark")],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "ddx")
+    dedup.dedup_index_persist(corpus, path)
+    engines = []
+    real_verify = dedup.ngram_jaccard
+
+    def verify(*args, _small_pairs=False, **kw):
+        engines.append(_small_pairs)
+        return real_verify(*args, _small_pairs=_small_pairs, **kw)
+
+    monkeypatch.setattr(dedup, "ngram_jaccard", verify)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    schema = "doc_id long, text string"
+    empty = spark.createDataFrame([], schema)
+    assert rows(dedup.incremental_dedup_persisted(empty, path)) == []
+    short = spark.createDataFrame([(50, "two words"), (51, ""), (52, "a b")], schema)
+    assert rows(dedup.incremental_dedup_persisted(short, path)) == [
+        (50, True, None, None), (51, True, None, None), (52, True, None, None)
+    ]
+    # equal-Jaccard tie between corpus docs 3 and 7: the lower id wins
+    tie = spark.createDataFrame([(100, text), (101, "fresh words for a new doc")], schema)
+    first = rows(dedup.ingest_batch(tie, path, batch_id="e1", skip_if_committed=True))
+    assert first == [(100, False, 3, 1.0), (101, True, None, None)]
+    # the index now holds the batch's own rows: the re-probe excludes them
+    assert rows(dedup.incremental_dedup_persisted(tie, path)) == first
+    # re-delivery of a committed batch: same answer, no second append
+    sh_before = rows(dedup.committed_index_tables(spark, path)[1])
+    again = rows(dedup.ingest_batch(tie, path, batch_id="e1", skip_if_committed=True))
+    assert again == first
+    assert rows(dedup.committed_index_tables(spark, path)[1]) == sh_before
+    assert dedup.manifest_batch_ids(spark, path).count("e1") == 1
+    assert engines and all(engines)
+
+
+def test_append_writes_one_shingle_file_and_one_bucket_file_per_band(
+    spark, tmp_path
+):
+    """An append lands exactly one shingle file and one bucket file per
+    band, whatever the session's parallelism slices the batch into."""
+    import glob
+
+    from mahout_samsara_book_spark.operators.dedup import (
+        dedup_index_append,
+        dedup_index_persist,
+        ingest_batch,
+    )
+
+    path = str(tmp_path / "ddx")
+    dedup_index_persist(_random_batch(spark, seed=1, first_id=0), path)
+    assert spark.sparkContext.defaultParallelism > 1
+    ingest_batch(_random_batch(spark, seed=2, first_id=1000), path, batch_id="i1")
+    dedup_index_append(
+        _random_batch(spark, seed=4, first_id=2000), path, batch_id="a1"
+    )
+    for bid in ("i1", "a1"):
+        assert len(glob.glob(f"{path}/shingles/batch_id={bid}/*.parquet")) == 1
+        per_band = [
+            len(glob.glob(f"{path}/buckets/band={band}/batch_id={bid}/*.parquet"))
+            for band in range(8)
+        ]
+        assert per_band == [1] * 8, (bid, per_band)

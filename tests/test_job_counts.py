@@ -2,14 +2,15 @@
 each corpus-sized reduction runs in one pass, so the number of jobs a
 call submits stays flat.  Counted per call with ``setJobGroup`` and
 ``statusTracker().getJobIdsForGroup``.  Jobs submitted from pool
-threads (the two concurrent index writes of ``ingest_batch``) do not
-carry the caller's job group and are not counted."""
+threads (the two concurrent index writes of an append) do not carry
+the caller's job group and are not counted."""
 
 import itertools
 
 from mahout_samsara_book_spark.algorithms.naive_bayes import train_text_nb
 from mahout_samsara_book_spark.operators.dedup import (
     dedup_index_persist,
+    incremental_dedup_persisted,
     ingest_batch,
 )
 
@@ -44,7 +45,7 @@ def test_train_text_nb_job_count(spark):
     assert _jobs(spark, lambda: train_text_nb(docs).collect()) <= 14
 
 
-def test_ingest_batch_job_count(spark, tmp_path):
+def _ingest_fixture(spark, tmp_path):
     corpus = spark.createDataFrame(
         [(i, _text(i)) for i in range(150)], "doc_id long, text string"
     )
@@ -54,6 +55,20 @@ def test_ingest_batch_job_count(spark, tmp_path):
     )
     path = str(tmp_path / "index")
     dedup_index_persist(corpus, path)
+    return batch, path
+
+
+def test_ingest_batch_job_count(spark, tmp_path):
+    batch, path = _ingest_fixture(spark, tmp_path)
     n = _jobs(spark, lambda: ingest_batch(batch, path).collect())
-    # 17 jobs in the caller's group on local[4]
-    assert n <= 19
+    # 6 jobs in the caller's group on local[4]: the batch collect, the
+    # candidate probe and the shingle fetch, and one broadcast job for
+    # each of the three local relations they join
+    assert n <= 6
+
+
+def test_incremental_dedup_persisted_job_count(spark, tmp_path):
+    batch, path = _ingest_fixture(spark, tmp_path)
+    # the same 6 jobs: the probe without the append
+    n = _jobs(spark, lambda: incremental_dedup_persisted(batch, path).collect())
+    assert n <= 6

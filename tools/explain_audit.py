@@ -926,31 +926,33 @@ def main() -> int:
     )
 
     import entry_m5 as _em9
+    import pyarrow as _pa
 
-    # the probe collects its candidate pairs when it is built, so its
-    # final plan reads them as a local relation: audit the lazy
-    # candidate plan the probe collects (the dedup module's own
-    # builder, over the same batch and index) plus the probe itself
+    # The probe runs when it is built (the batch in core, its result a
+    # local relation), so audit the plans it executes, built with the
+    # dedup module's own plan functions over the same batch and index: the
+    # batch's one Spark job, the candidate probe of the index buckets
+    # and the candidates' index-shingle fetch.
     from mahout_samsara_book_spark.operators import dedup as _ddmod
     from mahout_samsara_book_spark.sources.tables import load_table
 
-    _docs9 = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    _sh9, _sig9 = _ddmod._batch_in_core(
-        _em9._ddx_probe_batch(_docs9), 3, _em9.MINHASH_K, _em9.MINHASH_SEED
-    )
-    _bkt9, _ = _ddmod._index_side(
-        _em9._dedup_index_path(spark, sf_dir), _sh9, "doc_id"
-    )
-    p37_cand = plan_of(
-        _ddmod._candidate_pairs(
-            _bkt9,
-            _ddmod.band_buckets(
-                _sig9, _em9.LSH_BANDS, _em9.MINHASH_K // _em9.LSH_BANDS
-            ),
-            "doc_id",
+    def _probe_plans(batch, path):
+        b = _ddmod._batch_in_core(
+            batch, 3, _em9.MINHASH_K, _em9.LSH_BANDS, _em9.MINHASH_SEED
         )
+        bkt, sh = _ddmod._index_side(spark, path, b, "doc_id")
+        ids = spark.createDataFrame(_pa.table({"doc_id": b.ids}))
+        return (
+            plan_of(_ddmod._batch_grams(batch, 3, "doc_id", "text")),
+            plan_of(_ddmod._cross_arm(spark.createDataFrame(b.bkt), bkt, "doc_id")),
+            plan_of(_ddmod._index_shingles(sh, ids, "doc_id")),
+        )
+
+    _docs9 = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    p37_batch, p37_cand, p37_fetch = _probe_plans(
+        _em9._ddx_probe_batch(_docs9), _em9._dedup_index_path(spark, sf_dir)
     )
-    p37 = p37_cand + plan_of(_em9.q_dedup_incremental_persisted(spark, sf_dir))
+    p37 = p37_batch + p37_cand + p37_fetch
     checks.append(
         (
             "incremental dedup persisted-index probe "
@@ -966,18 +968,19 @@ def main() -> int:
                     "bucket-index scan is column-pruned to (doc_id, sig) "
                     "— band comes from the partition directory, sigs "
                     "filtered at the scan",
-                    "ReadSchema: struct<doc_id:bigint,sig:string>" in p37,
+                    "ReadSchema: struct<doc_id:bigint,sig:string>"
+                    in p37_cand,
                 ),
                 (
                     "shingle-index scan is column-pruned to (doc_id, h)",
-                    "ReadSchema: struct<doc_id:bigint,h:bigint>" in p37,
+                    "ReadSchema: struct<doc_id:bigint,h:bigint>" in p37_fetch,
                 ),
                 (
                     "corpus is NEVER re-shingled/re-minhashed: every "
                     "documents scan is batch-side (doc_id % 50 = 17 / "
                     "doc_id < 10), the corpus filter (!= 17) appears "
                     "nowhere",
-                    "% 50) = 17" in p37 and "% 50) != 17" not in p37,
+                    "% 50) = 17" in p37_batch and "% 50) != 17" not in p37,
                 ),
                 (
                     "candidate generation is an equi-join on (band, sig) "
@@ -1064,7 +1067,11 @@ def main() -> int:
 
     import entry_m5 as _em10
 
-    p40 = plan_of(_em10.q_dedup_incremental_append(spark, sf_dir))
+    p40_batch, p40_cand, p40_fetch = _probe_plans(
+        _em10._ddx_append_batch2(spark, sf_dir),
+        _em10._dedup_lifecycle_path(spark, sf_dir),
+    )
+    p40 = p40_batch + p40_cand + p40_fetch
     checks.append(
         (
             "persisted dedup lifecycle (dedup_incremental_append) — "
@@ -1077,19 +1084,19 @@ def main() -> int:
                     "documents scan is batch-2-side (the % 50 = 17 "
                     "re-key), the corpus slice filter (% 10 = 3) "
                     "appears nowhere",
-                    "% 50) = 17" in p40 and "% 10) = 3" not in p40,
+                    "% 50) = 17" in p40_batch and "% 10) = 3" not in p40,
                 ),
                 (
                     "the self-row guard is a BROADCAST anti-join on "
                     "the batch's ids (no shuffled join added to the "
                     "index probe)",
-                    "BroadcastHashJoin LeftAnti" in p40,
+                    "BroadcastHashJoin LeftAnti" in p40_cand,
                 ),
                 (
                     "bucket-index probe scans the appended band "
                     "partitions through the same partitioned layout "
                     "(band from the directory, not the file)",
-                    "PartitionFilters" in p40,
+                    "PartitionFilters" in p40_cand,
                 ),
                 (
                     "candidate generation stays an equi-join on "
