@@ -115,10 +115,9 @@ def q_text_shingle_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one hash(doc_id) exchange feeds the (doc_id, h) distinct AND —
     # through the weighted relation tfidf_neighbors builds on top —
-    # the per-doc norm aggregate (round-13, guide §2.4: the same fused
-    # discipline as dedup's _shingle_sig_fused; the unfused form
-    # shuffled the full exploded shingle relation for the distinct and
-    # again for the s2 groupBy)
+    # the per-doc norm aggregate (round-13, guide §2.4: the unfused
+    # form shuffled the full exploded shingle relation for the distinct
+    # and again for the s2 groupBy)
     pre = docs.select("doc_id", "text").repartition(
         spark.sparkContext.defaultParallelism, F.col("doc_id")
     )

@@ -5,8 +5,10 @@ embedding-cosine near-dup.
 Design for 100 TB:
 
 - Exact dedup is one hash-groupBy (map-side partial agg).
-- MinHash: shingle explode → k minimum-aggregates in ONE groupBy pass
-  (k map-side partial mins — no k-fold shuffle).
+- MinHash: the corpus builders sketch each document ROW map-only — its
+  distinct gram hashes and their k affine minimums, no exchange
+  (:func:`_doc_sketch`); the relational form over a shingle relation
+  is k minimum-aggregates in ONE groupBy pass (:func:`minhash_signatures`).
 - LSH banding: signatures explode to (band, band_sig) buckets; candidate
   pairs come from a self-join WITHIN buckets only — the quadratic
   all-pairs join never happens. Bucket skew is AQE's skew-join case.
@@ -151,39 +153,47 @@ def _hashed_shingles(shingle_df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def _shingle_sig_fused(
+def _doc_sketch(
     docs: DataFrame,
     n: int,
     k: int,
     seed: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
-    """(distinct shingle hashes, minhash signatures) for ``docs``
-    sharing ONE hash(id) exchange (round-12, guide §2.4): repartition
-    the raw docs by ``id_col`` once, then the shingle explode preserves
-    that partitioning, so BOTH the (id, h) distinct (clustered-by a
-    superset of the partitioning) and the per-id min-aggregation run
-    exchange-free on top of it.  The unfused form paid three exchanges
-    (parallelism widen + distinct on (id, h) + signature groupBy(id));
-    plan depth — and with AQE, stage-job count — drops by two per
-    consumer, and at scale one pass of raw doc bytes replaces a full
-    shingle-relation shuffle plus the signature exchange.  Content is
-    identical (set semantics; partitioning-invariant aggregations).
-    Residual: a single pathologically huge document tokenizes inside
-    one partition here, where the unfused distinct spread its shingles
-    — bounded by the crawl-batch document-size cap, same class as the
-    per-user history cap (cooccurrence.py).  Corpus-scale callers
-    use it; a batch-bounded caller holds its batch in core instead
-    (:func:`_batch_in_core`)."""
-    spark = docs.sparkSession
-    pre = docs.select(F.col(id_col), F.col(text_col)).repartition(
-        spark.sparkContext.defaultParallelism, F.col(id_col)
+) -> DataFrame:
+    """``(id, hs, mh_0 … mh_{k-1})`` per document ROW: its distinct gram
+    hashes and its MinHash signature (:func:`minhash_signatures`' affine
+    mins over ``hs``), map-only on the input's own scan partitions — no
+    exchange, no aggregate; a row without shingles has no sketch row.
+    Precondition: one row per id.  Then the rows equal the per-id
+    aggregates of :func:`shingle_hashes` and :func:`minhash_signatures`
+    exactly (an id on several rows would get one sketch per row)."""
+    hs = F.col("hs")
+
+    def mins(a: int, b: int):
+        return F.array_min(F.transform(hs, lambda h: affine(h, a, b)))
+
+    # a row without shingles drops out of a one-element explode, not a
+    # filter: the optimizer pushes a filter on hs below the projections,
+    # where it re-derives the token hashes once per gram
+    keep = F.when(F.size(hs) > 0, F.array(F.array_distinct(hs)))
+    return (
+        _batch_grams(docs, n, id_col, text_col)
+        .select(F.col(id_col), F.explode(keep).alias("hs"))
+        .select(
+            F.col(id_col),
+            hs,
+            *[
+                mins(a, b).alias(f"mh_{i}")
+                for i, (a, b) in enumerate(hash_family(k, seed))
+            ],
+        )
     )
-    sh = shingle_hashes(
-        pre, n, id_col, text_col, distinct=False
-    ).dropDuplicates()
-    return sh, minhash_signatures(sh, k, seed, id_col)
+
+
+def _sketch_shingles(sk: DataFrame, id_col: str) -> DataFrame:
+    """The distinct ``(id, h)`` shingle rows of a :func:`_doc_sketch`."""
+    return sk.select(F.col(id_col), F.explode("hs").alias("h"))
 
 
 class _InCoreBatch(NamedTuple):
@@ -258,8 +268,9 @@ def _batch_in_core(
 
 
 def _batch_grams(batch: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
-    """``(id, hs)``: one row per batch row with its gram-hash array —
-    the one Spark job of :func:`_batch_in_core`."""
+    """``(id, hs)``: one row per input row with its gram-hash array —
+    the one Spark job of :func:`_batch_in_core` and the base of
+    :func:`_doc_sketch`."""
     return _token_hashes(batch, id_col, text_col).select(
         F.col(id_col), _gram_hashes(n).alias("hs")
     )
@@ -284,20 +295,7 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Band the k = bands·rows signature, bucket on (band, band-sig),
     emit unordered candidate pairs (a < b) from same-bucket docs."""
-    band_sigs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.concat_ws(
-                    "_", *[F.col(f"mh_{bi * rows + r}") for r in range(rows)]
-                ).alias("sig"),
-            )
-            for bi in range(bands)
-        ]
-    )
-    buckets = signatures.select(
-        F.col(id_col), F.explode(band_sigs).alias("bs")
-    ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+    buckets = band_buckets(signatures, bands, rows, id_col)
     left = buckets.alias("l")
     right = buckets.alias("r")
     return (
@@ -435,20 +433,16 @@ def minhash_lsh_dedup(
     text_col: str = "text",
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → MinHash → LSH buckets →
-    exact-Jaccard verify ≥ threshold. ``(doc_a, doc_b, jaccard)``."""
-    rows = k // bands
-    # the hashed shingle set feeds BOTH the signature build and the
-    # exact-Jaccard verify — persist it once (longs, not gram strings)
-    # instead of re-tokenizing the corpus.  Fused build (round-12): the
-    # distinct and the signature aggregation share one hash(id)
-    # exchange (_shingle_sig_fused); the signature plan's shingle
-    # subtree matches the tracked relation, so the cache serves it.
-    fsh, sig = _shingle_sig_fused(docs, n, k, seed, id_col, text_col)
-    sh = track(fsh)
+    exact-Jaccard verify ≥ threshold. ``(doc_a, doc_b, jaccard)``.
+    ``docs`` holds one row per id (:func:`_doc_sketch`)."""
+    # the per-doc sketch feeds BOTH the banding and the exact-Jaccard
+    # verify's shingles — persist it once (map-only, no exchange)
+    # instead of re-tokenizing the corpus
+    sk = track(_doc_sketch(docs, n, k, seed, id_col, text_col))
     # the verify reads the candidate set twice (the candidate-id semi
     # filter + the pair probe) — cache the banding join's output
-    cand = track(lsh_candidate_pairs(sig, bands, rows, id_col))
-    return ngram_jaccard(sh, cand, id_col).filter(
+    cand = track(lsh_candidate_pairs(sk, bands, k // bands, id_col))
+    return ngram_jaccard(_sketch_shingles(sk, id_col), cand, id_col).filter(
         F.col("jaccard") >= F.lit(threshold)
     )
 
@@ -885,22 +879,25 @@ def incremental_dedup(
     index this join probes (id, band, sig — exactly what this function
     materializes); the Jaccard verify then touches only candidate
     shingle slices (see ngram_jaccard's semi-filter discipline).
-    Corpus and batch ids must be disjoint.  The batch is held in core
-    (:func:`_batch_in_core`); the corpus side stays lazy, so the probe
-    and the candidates' shingle fetch each derive it (the persisted
-    index, :func:`incremental_dedup_persisted`, is the shape that
-    derives it once)."""
-    # fused corpus build: one hash(id) exchange instead of three (see
-    # _shingle_sig_fused)
-    sh_c, sig_c = _shingle_sig_fused(corpus, n, k, seed, id_col, text_col)
-    return _incremental_match(
-        batch.sparkSession,
-        _batch_in_core(batch, n, k, bands, seed, id_col, text_col),
-        band_buckets(sig_c, bands, k // bands, id_col),
-        sh_c,
-        threshold,
-        id_col,
-    )
+    Corpus and batch ids must be disjoint, and the corpus holds one row
+    per id (:func:`_doc_sketch`).  The batch is held in core
+    (:func:`_batch_in_core`); the corpus side is sketched map-only and
+    persisted while the probe runs, so the candidate probe fills it and
+    the candidates' shingle fetch reads it (the persisted index,
+    :func:`incremental_dedup_persisted`, derives it once for every
+    batch)."""
+    sk = track(_doc_sketch(corpus, n, k, seed, id_col, text_col))
+    try:
+        return _incremental_match(
+            batch.sparkSession,
+            _batch_in_core(batch, n, k, bands, seed, id_col, text_col),
+            band_buckets(sk, bands, k // bands, id_col),
+            _sketch_shingles(sk, id_col),
+            threshold,
+            id_col,
+        )
+    finally:
+        release(sk)
 
 
 # candidate rows (cross-arm rows, one per shared bucket, plus
@@ -1169,35 +1166,39 @@ def dedup_index_persist(
     dedup persisted-index probe').  Every row carries a ``batch_id``
     and ``<path>/manifest`` lists the COMMITTED batch ids (the corpus
     build commits as ``INDEX_CORPUS_BATCH``, written last) — see
-    :func:`dedup_index_append` for the crash-safe append protocol."""
+    :func:`dedup_index_append` for the crash-safe append protocol.
+    The corpus holds one row per id (:func:`_doc_sketch`); the build is
+    map-only on its scan partitions, so each write task lands one
+    shingle file and one bucket file per band."""
     _assert_index_id_type(corpus, id_col)
-    rows = k // bands
-    # fused shingle+signature build (one hash(id) exchange, see
-    # _shingle_sig_fused); the two table writes are independent and
-    # invisible until the manifest commit, so they overlap (guide §2.6)
-    fsh, fsig = _shingle_sig_fused(corpus, n, k, seed, id_col, text_col)
-    sh_c = track(fsh)
-    bkt = band_buckets(fsig, bands, rows, id_col)
-
-    def _write_shingles() -> None:
-        sh_c.withColumn(
-            "batch_id", F.lit(INDEX_CORPUS_BATCH)
-        ).write.mode("overwrite").partitionBy("batch_id").parquet(
-            path + "/shingles"
-        )
-
-    def _write_buckets() -> None:
-        bkt.withColumn(
-            "batch_id", F.lit(INDEX_CORPUS_BATCH)
-        ).write.mode("overwrite").partitionBy("band", "batch_id").parquet(
-            path + "/buckets"
-        )
-
+    # both writes read the one persisted sketch; independent and
+    # invisible until the manifest commit, they overlap (guide §2.6)
+    sk = track(_doc_sketch(corpus, n, k, seed, id_col, text_col))
+    sh, bkt = _corpus_index_tables(sk, bands, k // bands, id_col)
     try:
-        _write_both(_write_shingles, _write_buckets)
+        _write_both(
+            lambda: sh.write.mode("overwrite").partitionBy("batch_id").parquet(
+                path + "/shingles"
+            ),
+            lambda: bkt.write.mode("overwrite").partitionBy(
+                "band", "batch_id"
+            ).parquet(path + "/buckets"),
+        )
     finally:
-        release(sh_c)
+        release(sk)
     _manifest_commit(corpus.sparkSession, path, INDEX_CORPUS_BATCH)
+
+
+def _corpus_index_tables(
+    sk: DataFrame, bands: int, rows: int, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The (shingles, buckets) rows :func:`dedup_index_persist` writes
+    from a :func:`_doc_sketch`, tagged with ``INDEX_CORPUS_BATCH``."""
+    tag = F.lit(INDEX_CORPUS_BATCH).alias("batch_id")
+    return (
+        _sketch_shingles(sk, id_col).select("*", tag),
+        band_buckets(sk, bands, rows, id_col).select("*", tag),
+    )
 
 
 def _write_both(write_a, write_b) -> None:
@@ -1612,7 +1613,6 @@ def ingest_batch(
     text_col: str = "text",
     batch_id: str | None = None,
     skip_if_committed: bool = False,
-    materialize=None,
 ) -> DataFrame:
     """One full crawl-ingest step against a persisted index: probe the
     batch (:func:`incremental_dedup_persisted`), then append its rows
@@ -1622,11 +1622,6 @@ def ingest_batch(
     (:func:`_incremental_match`), so executing the returned DataFrame
     reads nothing from the index; within-batch pairs are handled by the
     probe's own batch-batch arm (min-id-wins).
-
-    ``materialize``: an optional callable ``DataFrame -> Any`` applied
-    to the probe result after the append (e.g. a parquet write of the
-    result); ingest_batch then returns its result instead of the
-    DataFrame.
 
     EXACTLY-ONCE under retries (round 12): with a caller-supplied
     deterministic ``batch_id`` and ``skip_if_committed=True``, a
@@ -1664,7 +1659,7 @@ def ingest_batch(
     )
     if not committed:
         _append(spark, b, path, id_col, batch_id)
-    return out if materialize is None else materialize(out)
+    return out
 
 
 def incremental_dedup_persisted(

@@ -100,15 +100,13 @@ def run_stream_ingest(
         # exactly {corpus + earlier batches + own committed rows}, and
         # the self-row anti-join makes it identical to first-attempt.
         # ingest_batch probes the index in core before its append and
-        # returns the result as a local relation; the `materialize`
-        # hook writes it once the append has committed.  Epochs stay
-        # sequential (foreachBatch).
+        # returns the result as a local relation, written here once the
+        # append has committed.  Epochs stay sequential (foreachBatch).
         ingest_batch(
             bdf.select("doc_id", "text"), index_path,
             n=n, k=k, bands=bands, seed=seed, threshold=threshold,
             batch_id=bid, skip_if_committed=True,
-            materialize=lambda df: df.write.mode("overwrite").parquet(dst),
-        )
+        ).write.mode("overwrite").parquet(dst)
 
     q = src.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
     try:

@@ -233,6 +233,8 @@ def test_d_sample_fault_releases_everything(spark, monkeypatch):
 def test_ingest_batch_fault_in_append_leaves_nothing_cached(
     spark, monkeypatch, tmp_path, materialize
 ):
+    """``materialize``: the caller's action on the result, if any — the
+    injected fault in the append raises before it could run."""
     from mahout_samsara_book_spark.operators import dedup
 
     path = str(tmp_path / "idx")
@@ -250,7 +252,9 @@ def test_ingest_batch_fault_in_append_leaves_nothing_cached(
     monkeypatch.setattr(dedup, "checkpoint", counting)
     monkeypatch.setattr(dedup, "_append", _fail_on_call(1, dedup._append))
     with pytest.raises(RuntimeError, match="injected"):
-        dedup.ingest_batch(_docs(spark, BATCH), path, materialize=materialize)
+        out = dedup.ingest_batch(_docs(spark, BATCH), path)
+        if materialize is not None:
+            materialize(out)
     # the batch shingles and the candidates are held in core
     assert n_ckpt == []
     assert len(cache._TRACKED) == n0
@@ -281,9 +285,7 @@ def test_ingest_batch_with_materialize_releases_what_it_registered(
     path = str(tmp_path / "idx")
     dedup_index_persist(_docs(spark, CORPUS), path)
     n0 = len(cache._TRACKED)
-    rows = ingest_batch(
-        _docs(spark, BATCH), path, materialize=lambda df: df.collect()
-    )
+    rows = ingest_batch(_docs(spark, BATCH), path).collect()
     assert {r["doc_id"]: r["dup_of"] for r in rows} == {100: 2, 101: None}
     assert len(cache._TRACKED) == n0
 

@@ -613,26 +613,39 @@ def _random_batch(spark, seed: int, n_docs: int = 60, first_id: int = 500):
 
 
 def test_in_core_band_keys_match_spark_functions(spark):
-    """The driver-side shingles and band keys of an ingest batch equal
-    the Spark functions' rows, for k divisible by bands and not."""
+    """The shingles and band keys of the driver-side ingest batch and of
+    the map-only per-document sketch equal the aggregate Spark
+    builders' rows, for k divisible by bands and not, over docs shorter
+    than n, empty and null texts and docs repeating a gram."""
     from mahout_samsara_book_spark.operators import dedup
 
-    batch = _random_batch(spark, seed=3)
+    rows = [tuple(r) for r in _random_batch(spark, seed=3).collect()]
+    rows += [(900, None), (901, "w1 w2 w3 w1 w2 w3 w1 w2 w3"), (902, "w4 w4 w4 w4")]
+    batch = spark.createDataFrame(rows, "doc_id long, text string")
     for n, k, bands, seed in [(3, 16, 8, 7), (2, 12, 4, 11), (3, 10, 3, 5)]:
         b = dedup._batch_in_core(batch, n, k, bands, seed)
         sh = dedup.shingle_hashes(batch, n)
         want_bkt = dedup.band_buckets(
             dedup.minhash_signatures(sh, k, seed), bands, k // bands
         )
-        assert sorted(zip(*b.sh.to_pydict().values())) == sorted(
-            map(tuple, sh.collect())
-        )
-        assert sorted(zip(*b.bkt.to_pydict().values())) == sorted(
+        got_sh = sorted(zip(*b.sh.to_pydict().values()))
+        got_bkt = sorted(zip(*b.bkt.to_pydict().values()))
+        assert got_sh == sorted(map(tuple, sh.collect()))
+        assert got_bkt == sorted(
             map(tuple, want_bkt.select("doc_id", "band", "sig").collect())
         )
         assert sorted(b.ids.to_pylist()) == sorted(
             r[0] for r in batch.select("doc_id").collect()
         )
+        # the per-document sketch: the same rows, and no sketch row for
+        # a doc without shingles (null, empty, fewer than n tokens)
+        sk = dedup._doc_sketch(batch, n, k, seed)
+        sk_sh = sorted(map(tuple, dedup._sketch_shingles(sk, "doc_id").collect()))
+        assert sk_sh == got_sh
+        assert sorted(
+            map(tuple, dedup.band_buckets(sk, bands, k // bands).collect())
+        ) == got_bkt
+        assert {r[0] for r in sk.select("doc_id").collect()} == {r[0] for r in sk_sh}
 
 
 def test_in_core_jaccard_matches_shuffled_verify(spark):
@@ -741,3 +754,25 @@ def test_append_writes_one_shingle_file_and_one_bucket_file_per_band(
             for band in range(8)
         ]
         assert per_band == [1] * 8, (bid, per_band)
+
+
+def test_index_build_writes_one_shingle_file_and_one_bucket_file_per_band(
+    spark, tmp_path
+):
+    """The corpus build is map-only on the corpus's scan partitions: a
+    single-partition corpus lands exactly one shingle file and one
+    bucket file per band, whatever the session's parallelism."""
+    import glob
+
+    from mahout_samsara_book_spark.operators.dedup import dedup_index_persist
+
+    assert spark.sparkContext.defaultParallelism > 1
+    corpus = _random_batch(spark, seed=6, first_id=0).coalesce(1)
+    path = str(tmp_path / "ddx")
+    dedup_index_persist(corpus, path)
+    assert len(glob.glob(f"{path}/shingles/**/*.parquet", recursive=True)) == 1
+    per_band = [
+        len(glob.glob(f"{path}/buckets/band={band}/**/*.parquet", recursive=True))
+        for band in range(8)
+    ]
+    assert per_band == [1] * 8

@@ -992,6 +992,39 @@ def main() -> int:
         )
     )
 
+    # The corpus build writes the two tables of one per-document sketch:
+    # audit both write plans, built with the module's own functions over
+    # the persisted-probe index's corpus.
+    p_ix_sh, p_ix_bkt = (
+        plan_of(df)
+        for df in _ddmod._corpus_index_tables(
+            _ddmod._doc_sketch(
+                _docs9.filter(F.col("doc_id") % 50 != 17),
+                3, _em9.MINHASH_K, _em9.MINHASH_SEED,
+            ),
+            _em9.LSH_BANDS, _em9.MINHASH_K // _em9.LSH_BANDS, "doc_id",
+        )
+    )
+    checks.append(
+        (
+            "dedup corpus index build (dedup_index_persist write plans)",
+            p_ix_sh + p_ix_bkt,
+            [
+                (
+                    "map-only: no Exchange under either write (shingles, "
+                    "signatures and band keys derive per document row)",
+                    "Exchange" not in p_ix_sh and "Exchange" not in p_ix_bkt,
+                ),
+                (
+                    "no HashAggregate under either write (no shingle "
+                    "distinct, no k-min aggregate)",
+                    "HashAggregate" not in p_ix_sh
+                    and "HashAggregate" not in p_ix_bkt,
+                ),
+            ],
+        )
+    )
+
     import entry_pipe as _ep9
 
     p38 = plan_of(_ep9.q_ev_asof_click(spark, sf_dir))
