@@ -606,39 +606,36 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
     # Ordering is deliberate: the driver's correctness gate truncates
     # after ~50 queries.  Window, by the standing rule: (0) the rows
-    # whose plan reaches the dedup corpus builders, now one map-only
-    # per-document sketch (minhash_lsh_dedup, the corpus side of
-    # incremental_dedup, dedup_index_persist — directly, through
-    # operators/pipeline.py, or through a shared index fixture); (1) the
-    # 19 Arrow block-codec and ridge rows and (2) the 16 r9 rows
-    # sel_chunk_docs through zorder_stats, both deferred by the previous
-    # window; (3) the two rows of the aggregate shingle/MinHash builders
-    # the sketch is tested against.  The previous window's cache-
-    # ownership cohort and r8/r9-stale rows, text_shingle_neighbors,
-    # graph_kcore and drm_rbind go first in the next window.
+    # whose plan reaches the embedding operators, which now decode
+    # every vector block through the DRM's Arrow codec on mapInArrow
+    # (ivf_assign is the rank-1 probe), and dedup_exact_substr, whose
+    # tokenize now runs once per scan; (1) the cache-ownership cohort,
+    # (2) the r8-stale and (3) r9-stale rows two windows back, ungraded
+    # since.  text_shingle_neighbors, graph_kcore and drm_rbind go
+    # first in the next window, then the sketch, block-codec and r9
+    # rows the previous window graded.
     rotation = [
-        # -- (0) the per-document sketch
-        "dedup_incremental", "dedup_incremental_persisted",
-        "dedup_incremental_append", "dedup_compact_probe",
-        "dedup_ingest_lifecycle", "ev_stream_ingest",
-        "dedup_lsh_jaccard", "dedup_clusters", "graph_components_lsls",
-        "sel_dedup_survivors", "docs_pipeline", "docs_funnel",
-        "sel_canonical",
-        # -- (1) Arrow block codec and ridge rows, deferred
-        "drm_gram", "drm_gram_wide", "drm_mmul", "drm_mmul_coo",
-        "drm_map_block", "drm_allreduce", "drm_sample_k", "twcnb_train",
-        "bahmani_weights", "emb_pca_power", "emb_pca_topk", "emb_ssvd",
-        "emb_dspca", "emb_qr_thin", "emb_als",
-        "drm_normal_eq", "dridge", "drm_ssr", "reg_coeff_tests",
-        # -- (2) deferred r9-stale rows
-        "sel_chunk_docs", "sel_decontaminate", "sel_domain_mix",
-        "sel_leakage_split", "sel_pack_sequences", "sel_shard_assign",
-        "sel_split_assign", "sel_stratified_sample", "sketch_heavy_hitters",
-        "sketch_kmv_union", "text_bm25_topk", "text_js_divergence",
-        "text_langid_confusion", "text_repetition", "text_top_terms",
-        "zorder_stats",
-        # -- (3) the aggregate builders' rows
-        "dedup_minhash_sig", "text_minhash_dedup_pairs",
+        # -- (0) embedding operators on the Arrow codec, exact substr
+        "dedup_embedding", "sel_decontaminate_emb", "sim_cosine_topk",
+        "ann_lsh_topk", "ivf_assign", "ivf_topk", "ivf_refine",
+        "kmeans_lloyd", "ann_ivf_persisted", "ann_ivf_persisted_topk",
+        "ann_ivf_incremental", "dedup_semantic", "pq_encode", "pq_mse",
+        "ann_ivfpq_topk", "ann_ivfpq_probe", "dedup_exact_substr",
+        # -- (1) cache-ownership cohort, deferred
+        "graph_pagerank", "text_token_stats", "text_bpe_chars",
+        "text_bpe_merges", "text_bpe_encode",
+        # -- (2) r8-stale rows
+        "sketch_cms", "sketch_hll", "sketch_hll_sliding",
+        "sketch_kmv_intersect", "sketch_sample_quantiles",
+        "text_bigram_lm", "text_inverted_index", "text_zipf_tail",
+        # -- (3) r9-stale rows (ivf_refine is in (0))
+        "bloom_build", "bloom_probe", "dedup_containment",
+        "dedup_ngram_jaccard", "emb_centroids", "emb_outliers",
+        "ev_asof_click", "ev_dedup", "ev_funnel", "ev_retention",
+        "ev_session_window", "ev_stream_asof", "ev_stream_enriched",
+        "fmt_orc_roundtrip", "multimodal_frames", "multimodal_png",
+        "multimodal_ppm", "multimodal_resize", "multimodal_wav",
+        "rel_revenue_by_nation_bucketed",
     ]
     missing = set(rotation) - full.keys()
     assert not missing, f"rotation names not in registry: {sorted(missing)}"

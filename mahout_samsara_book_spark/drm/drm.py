@@ -21,7 +21,9 @@ Design rules (SURVEY §7, 100 TB posture):
   reads a batch's ``features`` list column straight into a
   ``float64[n, ncol]`` array and ``_encode`` writes one back, with no
   per-row Python objects. Used only where SQL genuinely can't express
-  the op (gram partials, arbitrary block functions).
+  the op (gram partials, arbitrary block functions). The embedding
+  operators (operators/similarity.py, dedup.py, selection.py) decode
+  their vector blocks through the same ``_decode``.
 - ``collect``-shaped results are only legal for *declared-small* outputs
   (gram matrices, sketches, models) — everything row-scaled stays
   distributed.
@@ -56,17 +58,24 @@ _NARROW_NCOL = 64
 _T_MAX_WIDTH = 65_536
 
 
-def _decode(batch, ncol: int) -> tuple[np.ndarray, np.ndarray]:
+def _decode(
+    batch, ncol: int | None = None, key: str = KEY, vec: str = FEAT
+) -> tuple[np.ndarray, np.ndarray]:
     """The block view of one Arrow batch (or table): ``(keys, block)``
-    with ``block`` a ``float64[n, ncol]`` array. Every row must hold
-    exactly ``ncol`` values — a bare reshape would silently realign
-    ragged rows (widths 3 and 5 fill two rows of 4)."""
-    feats = batch.column(FEAT)
-    if np.any(np.asarray(pc.list_value_length(feats)) != ncol):
+    with ``keys`` the int64 ``key`` column and ``block`` the ``vec``
+    list column as a ``float64[n, ncol]`` array. Without ``ncol`` the
+    width is the first row's. Every row must hold exactly ``ncol``
+    values — a bare reshape would silently realign ragged rows (widths
+    3 and 5 fill two rows of 4)."""
+    feats = batch.column(vec)
+    widths = np.asarray(pc.list_value_length(feats))
+    if ncol is None:
+        ncol = int(widths[0]) if len(widths) else 0
+    if np.any(widths != ncol):
         raise ValueError(f"DRM rows are not all ncol={ncol} wide")
     # list_flatten honours slice offsets (``.values`` would not)
     flat = np.array(pc.list_flatten(feats), dtype=np.float64)
-    keys = np.asarray(batch.column(KEY), dtype=np.int64)
+    keys = np.asarray(batch.column(key), dtype=np.int64)
     return keys, flat.reshape(len(feats), ncol)
 
 

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from mahout_samsara_book_spark.cache import checkpoint, release, track
 
 from mahout_samsara_book_spark.functions.text import tokenize
-from mahout_samsara_book_spark.operators.similarity import ensure_min_partitions
 from mahout_samsara_book_spark.operators.hashing import (
     P31,
     affine,
@@ -38,6 +37,7 @@ from mahout_samsara_book_spark.operators.hashing import (
     h60,
     hash_family,
 )
+from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 
 # ------------------------------------------------------------------ #
 # exact dedup
@@ -664,7 +664,7 @@ def embedding_near_dups(
 
     - ``broadcast`` (corpus fits Catalyst's broadcast estimate): the
       comparison side ships as one numpy matrix and each Arrow batch
-      does a single BLAS matmul against it inside ``mapInPandas`` (258M
+      does a single BLAS matmul against it inside ``mapInArrow`` (258M
       flops for 2k×64 — milliseconds), instead of a cross join
       evaluating per-pair SQL folds (~50× slower measured at sf0.1).
       Only surviving pairs (id_a < id_b, cos ≥ threshold) are emitted,
@@ -677,10 +677,9 @@ def embedding_near_dups(
       (operators/similarity.py) feeding only candidate pairs to a
       verifier.
     """
-    import numpy as np
-    import pandas as pd
-
+    from mahout_samsara_book_spark.drm.drm import _decode
     from mahout_samsara_book_spark.operators.similarity import (
+        _collect_block,
         _dot,
         _pick_verify_strategy,
     )
@@ -712,30 +711,22 @@ def embedding_near_dups(
             )
             .filter(F.col("cosine") >= threshold)
         )
-    pdf = base.toPandas()
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    m = np.vstack(pdf["v"].to_numpy())
+    ids, m = _collect_block(base, id_col, "v")
     nrm = np.sqrt((m * m).sum(axis=1))
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast((ids, m, nrm))
+    bc = emb.sparkSession.sparkContext.broadcast((ids, m, nrm))
 
     def pairs(batches):
         r_ids, r_m, r_nrm = bc.value
-        for pdfb in batches:
-            l_ids = pdfb[id_col].to_numpy(dtype=np.int64)
-            l_m = np.vstack(pdfb["v"].to_numpy())
+        for batch in batches:
+            l_ids, l_m = _decode(batch, r_m.shape[1], id_col, "v")
             l_nrm = np.sqrt((l_m * l_m).sum(axis=1))
             cos = (l_m @ r_m.T) / np.outer(l_nrm, r_nrm)
             li, ri = np.nonzero((cos >= threshold) & (l_ids[:, None] < r_ids[None, :]))
-            yield pd.DataFrame(
-                {
-                    "vec_a": l_ids[li],
-                    "vec_b": r_ids[ri],
-                    "cosine": cos[li, ri],
-                }
+            yield pa.RecordBatch.from_pydict(
+                {"vec_a": l_ids[li], "vec_b": r_ids[ri], "cosine": cos[li, ri]}
             )
 
-    return base.mapInPandas(
+    return base.mapInArrow(
         pairs, schema="vec_a long, vec_b long, cosine double"
     )
 
@@ -1977,20 +1968,19 @@ def exact_substr_spans(
     boilerplate, not plagiarism) → equi-join on the hash, one
     aggregation per pair. Total cost: linear in corpus tokens plus
     Σ df² over surviving windows."""
-    from mahout_samsara_book_spark.operators.similarity import (
-        ensure_min_partitions,
-    )
-
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), r"[^\p{L}\p{Nd}]+"),
         lambda x: x != F.lit(""),
     )
-    base = (
-        ensure_min_partitions(docs.select(id_col, text_col))
-        .select(F.col(id_col), toks.alias("ts"))
-        .filter(F.size("ts") >= window)
+    base = ensure_min_partitions(docs.select(id_col, text_col)).select(
+        F.col(id_col), toks.alias("ts")
     )
-    idxs = F.sequence(F.lit(0), F.size("ts") - window)
+    # a document shorter than the window gets a NULL index sequence,
+    # which explode drops: a filter on size(ts) would be pushed below
+    # the projection and tokenize every document twice
+    idxs = F.when(
+        F.size("ts") >= window, F.sequence(F.lit(0), F.size("ts") - window)
+    )
     w = base.select(
         F.col(id_col),
         F.explode(
@@ -2062,7 +2052,7 @@ def semantic_dedup(
     assignment is a broadcast-BLAS matmul (near-free in the center
     count) while pair work is Σ|cluster|² ≈ n·width, so width-targeting
     makes the verify LINEAR in the corpus where √n centers made it
-    n^1.5.  The verify itself is one ``applyInPandas`` per cluster:
+    n^1.5.  The verify itself is one ``applyInArrow`` per cluster:
     every vector's array crosses the shuffle ONCE (grouped by cid) and
     each cluster scores as a single BLAS ``U @ U.T`` — at 200k×64 that
     is ~100 MB of shuffle instead of the 13 GB a pair-stream join would
@@ -2077,12 +2067,11 @@ def semantic_dedup(
     pathological mega-cluster (e.g. a spam blob of one embedding)
     serializes its width² in one task — the shape SemDeDup itself has;
     pre-split such blobs with exact dedup upstream."""
-    import numpy as np
-    import pandas as pd
-
+    from mahout_samsara_book_spark.drm.drm import _decode
     from mahout_samsara_book_spark.operators.similarity import (
         _centers_matrix,
         _normed,
+        _unit,
         ivf_assign,
         ivf_centers,
     )
@@ -2100,21 +2089,18 @@ def semantic_dedup(
         ivf_centers(emb, n_centers, seed, id_col, vec_col)
     )
     assign = ivf_assign(emb, centers, id_col, vec_col)
-    base = _normed(emb, id_col, vec_col)
-    data = base.join(assign, id_col)
+    data = _unit(_normed(emb, id_col, vec_col), id_col).join(assign, id_col)
 
-    def pairs_op(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        x = np.vstack(pdf["v"].to_numpy())
-        u = x / pdf["nrm"].to_numpy()[:, None]
+    def pairs_op(table: pa.Table) -> pa.Table:
+        ids, u = _decode(table, None, id_col, "u")
         s = u @ u.T
         ii, jj = np.nonzero(s >= threshold)
         m = ii < jj
         a = np.minimum(ids[ii[m]], ids[jj[m]])
         b = np.maximum(ids[ii[m]], ids[jj[m]])
-        return pd.DataFrame({"vec_a": a, "vec_b": b})
+        return pa.table({"vec_a": a, "vec_b": b})
 
-    dups = data.groupBy("cid").applyInPandas(
+    dups = data.groupBy("cid").applyInArrow(
         pairs_op, schema="vec_a long, vec_b long"
     )
     groups = dup_clusters(dups, "vec_a", "vec_b").select(

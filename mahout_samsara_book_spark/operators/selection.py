@@ -19,6 +19,8 @@ anyway (each output file packed independently).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -256,19 +258,18 @@ def decontaminate_embeddings(
     recomputing oracle (filter MEMBERSHIP is not absorbed by the
     %.7e value convention; same caveat class as the bahmani φ
     threshold). Emitted cosine stays unrounded."""
-    import numpy as np
-    import pandas as pd
-
+    from mahout_samsara_book_spark.drm.drm import _decode
+    from mahout_samsara_book_spark.operators.similarity import _collect_block
     from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 
-    pdf = (
+    e_ids, e_m = _collect_block(
         eval_df.select(
             F.col(id_col).cast("long").alias("eval_id"),
             F.col(vec_col).cast("array<double>").alias("v"),
-        )
-    ).toPandas()
-    e_ids = pdf["eval_id"].to_numpy(dtype=np.int64)
-    e_m = np.vstack(pdf["v"].to_numpy())
+        ),
+        "eval_id",
+        "v",
+    )
     e_nrm = np.sqrt((e_m * e_m).sum(axis=1))
     bc = train.sparkSession.sparkContext.broadcast((e_ids, e_m, e_nrm))
     thr = float(threshold)
@@ -283,8 +284,7 @@ def decontaminate_embeddings(
     def flag(batches):
         r_ids, r_m, r_nrm = bc.value
         for b in batches:
-            t_ids = b["train_id"].to_numpy(dtype=np.int64)
-            t_m = np.vstack(b["v"].to_numpy())
+            t_ids, t_m = _decode(b, r_m.shape[1], "train_id", "v")
             t_nrm = np.sqrt((t_m * t_m).sum(axis=1))
             # chunk the eval axis so the dense (batch × eval-chunk)
             # cosine block stays ~32 MB regardless of eval size —
@@ -302,7 +302,7 @@ def decontaminate_embeddings(
                 cos = np.where(denom > 0, cos, -1.0)
                 ti, ei = np.nonzero(np.round(cos, 9) >= thr)
                 if ti.size:
-                    yield pd.DataFrame(
+                    yield pa.RecordBatch.from_pydict(
                         {
                             "train_id": t_ids[ti],
                             "eval_id": rid[ei],
@@ -310,7 +310,7 @@ def decontaminate_embeddings(
                         }
                     )
 
-    return base.mapInPandas(
+    return base.mapInArrow(
         flag, schema="train_id long, eval_id long, cosine double"
     )
 

@@ -15,8 +15,15 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from mahout_samsara_book_spark.cache import cached_count
+from mahout_samsara_book_spark.drm.drm import _decode
+from mahout_samsara_book_spark.partitioning import ensure_min_partitions
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -127,15 +134,6 @@ def _pick_verify_strategy(
     return "broadcast" if base.count() <= 200_000 else "join"
 
 
-# re-exported for existing importers; the implementation moved to
-# partitioning.py so tokenize/sketch operators can share it without a
-# functions -> operators.similarity dependency
-from mahout_samsara_book_spark.partitioning import (  # noqa: E402,F401
-    ensure_min_partitions,
-)
-from mahout_samsara_book_spark.cache import cached_count  # noqa: E402
-
-
 def _topk_desc_tiebreak(ids, scores, k: int):
     """Indices of the top-k by (score desc, id asc) — bit-identical to a
     full ``lexsort((ids, -scores))[:k]`` but selection-based: partition
@@ -152,8 +150,6 @@ def _topk_desc_tiebreak(ids, scores, k: int):
     similarity is never a valid neighbor, so the filtered result is
     the intended semantics; when fewer than k finite scores remain,
     fewer than k rows come back."""
-    import numpy as np
-
     finite = np.isfinite(scores)
     if not finite.all():
         keep = np.nonzero(finite)[0]
@@ -178,6 +174,27 @@ def _normed(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     ).withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
 
 
+def _unit(base: DataFrame, id_col: str) -> DataFrame:
+    """``(id, u)``: each vector of a :func:`_normed` relation divided by
+    its norm — one IEEE division per element, so every verify path
+    scores the same unit rows. The norm enters as an array, not as a
+    lambda capture: Catalyst inlines ``nrm``'s fold into a lambda that
+    names it, and the fold then runs once per element (dim² per row)."""
+    nrms = F.array_repeat(F.col("nrm"), F.size("v"))
+    return base.select(
+        F.col(id_col),
+        F.zip_with(F.col("v"), nrms, lambda x, n: x / n).alias("u"),
+    )
+
+
+def _collect_block(df: DataFrame, id_col: str, vec_col: str):
+    """``(ids, matrix)`` of a driver-sized relation in ascending id
+    order: one ``toArrow()`` collect, decoded by the DRM block codec
+    (the width is the first row's; ragged rows raise ``ValueError``)."""
+    table = df.select(id_col, vec_col).toArrow().sort_by(id_col)
+    return _decode(table, key=id_col, vec=vec_col)
+
+
 def cosine_topk(
     emb: DataFrame,
     k: int = 5,
@@ -199,9 +216,6 @@ def cosine_topk(
       (quadratic by nature; the scale path for big corpora is
       :func:`lsh_topk`).
     """
-    import numpy as np
-    import pandas as pd
-
     emb = ensure_min_partitions(emb)
     base = _normed(emb, id_col, vec_col)
     if strategy == "auto":
@@ -211,23 +225,18 @@ def cosine_topk(
             else "pairs"
         )
     if strategy == "broadcast":
-        pdf = base.orderBy(id_col).toPandas()
-        ids = pdf[id_col].to_numpy()
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-        mat = mat / pdf["nrm"].to_numpy()[:, None]
-        bc = emb.sparkSession.sparkContext.broadcast((ids, mat))
+        unit = _unit(base, id_col)
+        bc = emb.sparkSession.sparkContext.broadcast(
+            _collect_block(unit, id_col, "u")
+        )
 
         def op(batches):
             all_ids, m = bc.value
             for b in batches:
-                if len(b) == 0:
-                    continue
-                blk = np.array(b["v"].tolist(), dtype=np.float64)
-                blk = blk / b["nrm"].to_numpy()[:, None]
+                qids, blk = _decode(b, m.shape[1], id_col, "u")
                 sims = blk @ m.T
                 out_id, out_nb, out_cos, out_rk = [], [], [], []
-                for row_i, vid in enumerate(b[id_col].to_numpy()):
-                    s = sims[row_i]
+                for vid, s in zip(qids, sims):
                     mask = all_ids != vid
                     # order: cosine desc, neighbor asc — tie-exact
                     # top-k SELECTION, not a full per-row corpus sort
@@ -237,16 +246,16 @@ def cosine_topk(
                     out_nb.extend(cand_ids[order])
                     out_cos.extend(cand_s[order])
                     out_rk.extend(range(1, len(order) + 1))
-                yield pd.DataFrame(
+                yield pa.RecordBatch.from_pydict(
                     {
-                        "vec_id": out_id,
-                        "neighbor": out_nb,
-                        "cosine": out_cos,
-                        "rank": out_rk,
+                        "vec_id": np.asarray(out_id, dtype=np.int64),
+                        "neighbor": np.asarray(out_nb, dtype=np.int64),
+                        "cosine": np.asarray(out_cos, dtype=np.float64),
+                        "rank": np.asarray(out_rk, dtype=np.int64),
                     }
                 )
 
-        return base.mapInPandas(
+        return unit.mapInArrow(
             op, schema="vec_id long, neighbor long, cosine double, rank long"
         )
     l, r = base.alias("l"), base.alias("r")
@@ -332,17 +341,11 @@ def _centers_matrix(centers, vec_col: str = "center"):
 
     EAGER AT CONSTRUCTION: passing a DataFrame runs the collect (a
     Spark job) immediately — the matrix must exist before any consumer
-    serializes its mapInPandas closure. Plan-audit-style callers that
+    serializes its Arrow closure. Plan-audit-style callers that
     construct but never execute should pass the tuple form."""
-    import numpy as np
-
     if isinstance(centers, tuple):
         return centers
-    pdf = centers.select("cid", vec_col).toPandas()
-    cids = pdf["cid"].to_numpy(dtype=np.int64)
-    order = np.argsort(cids, kind="stable")
-    mat = np.vstack(pdf[vec_col].to_numpy()[order]).astype(np.float64)
-    return cids[order], mat
+    return _collect_block(centers, "cid", vec_col)
 
 
 def ivf_assign(
@@ -356,62 +359,14 @@ def ivf_assign(
     ``centers`` is the center relation or an already-collected
     ``(cids, matrix)`` tuple from :func:`_centers_matrix`.
 
-    Round-7 execution: broadcast-BLAS argmin. The centroid matrix
-    ships once per executor and every Arrow batch computes the full
-    distance block as ONE matmul (expanded form ‖x‖²+‖c‖²−2xᵀc,
-    center-axis chunked to ~32 MB per task) — a single NARROW pass,
-    zero shuffle. The previous relational form (broadcast cross join +
-    window argmin) materialized and SHUFFLED the n×√n pair stream to
-    rank it: at sf10 that is 89M rows through one exchange per call,
-    measured 167 s on kmeans_lloyd's three assigns vs ~9 s for this
-    path. Tie/ulp contract: chunks ascend in cid and the running merge
-    keeps strict-less, so exact distance ties break to the smallest
-    cid, same as the oracle's ``ORDER BY d2, cid``; sub-ulp expanded-vs
-    -fold noise can flip an argmin only when two centers are
-    equidistant to ~1e-15 relative — the same continuous-data
-    robustness contract as the bahmani sampler (entry docstrings).
-    Corpus-member centers are bit-safe: both sides evaluate identical
-    expressions on identical slices, so the self-distance ties out
-    exactly. For center counts beyond the driver-collect ceiling the
-    declared relational twin :func:`ivf_assign_join` keeps the old
-    shape (parity-tested in tests/test_similarity_blas.py)."""
-    import numpy as np
-    import pandas as pd
-
-    cids, cmat = _centers_matrix(centers)
-    c2 = (cmat * cmat).sum(axis=1)
-    bc = emb.sparkSession.sparkContext.broadcast((cids, cmat, c2))
-    base = ensure_min_partitions(
-        emb.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-        )
+    The assignment is :func:`ivf_probes`' rank-1 cell: the same
+    broadcast-BLAS narrow pass and the same (d2, cid) tie contract.
+    For center counts beyond the driver-collect ceiling the declared
+    relational twin :func:`ivf_assign_join` keeps the old shape
+    (parity-tested in tests/test_similarity_blas.py)."""
+    return ivf_probes(emb, centers, 1, id_col, vec_col).select(
+        F.col("q_id").alias(id_col), "cid"
     )
-
-    def op(batches):
-        k_ids, cm, cn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.vstack(pdf["_v"].to_numpy())
-            x2 = (x * x).sum(axis=1)
-            best_d = np.full(len(x), np.inf)
-            best_c = np.zeros(len(x), dtype=np.int64)
-            chunk = max(16, 4_000_000 // max(1, x.shape[0]))
-            for lo in range(0, cm.shape[0], chunk):
-                d2 = np.maximum(
-                    0.0,
-                    x2[:, None]
-                    + cn[lo : lo + chunk][None, :]
-                    - 2.0 * (x @ cm[lo : lo + chunk].T),
-                )
-                j = np.argmin(d2, axis=1)
-                dj = d2[np.arange(len(x)), j]
-                upd = dj < best_d
-                best_d = np.where(upd, dj, best_d)
-                best_c = np.where(upd, k_ids[lo + j], best_c)
-            yield pd.DataFrame({id_col: pdf[id_col], "cid": best_c})
-
-    return base.mapInPandas(op, schema=f"{id_col} long, cid long")
 
 
 def ivf_assign_join(
@@ -453,23 +408,31 @@ def ivf_probes(
 ) -> DataFrame:
     """``(q_id, cid)`` — each vector's ``nprobe`` nearest centroid
     cells in (d2, cid) lexicographic order, the IVF probe-list step.
-    Same broadcast-BLAS single-narrow-pass execution and tie contract
-    as :func:`ivf_assign` (the relational form shuffled the n×√n pair
-    stream through a window to keep nprobe rows of it). Per-row
-    selection: within each ascending-cid chunk a STABLE argsort on d2
-    takes the chunk's top-nprobe (ties → lowest cid), the survivors are
-    re-ordered by cid so the cross-chunk candidate matrix stays
-    cid-ascending among equal d2, and one final stable argsort on d2
-    yields the global (d2, cid) order.
+
+    Execution: broadcast-BLAS, one NARROW Arrow pass, zero shuffle.
+    The centroid matrix ships once per executor and every batch
+    computes its distance block in the expanded form ‖x‖²+‖c‖²−2xᵀc,
+    center-axis chunked to ~32 MB per task. (The relational form —
+    broadcast cross join + window — shuffled the n×√n pair stream to
+    rank it: at sf10 89M rows through one exchange per call, 167 s on
+    kmeans_lloyd's three assigns vs ~9 s here.) Per-row selection:
+    within each ascending-cid chunk a STABLE argsort on d2 takes the
+    chunk's top-nprobe (ties → lowest cid; ``np.argmin``, its first
+    column, when nprobe is 1), the survivors are re-ordered by cid so
+    the cross-chunk candidate matrix stays cid-ascending among equal
+    d2, and one final stable selection on d2 yields the global
+    (d2, cid) order — the oracle's ``ORDER BY d2, cid``. Sub-ulp
+    expanded-vs-fold noise can flip a pick only when two centers are
+    equidistant to ~1e-15 relative — the same continuous-data
+    robustness contract as the bahmani sampler (entry docstrings).
+    Corpus-member centers are bit-safe: both sides evaluate identical
+    expressions on identical slices, so the self-distance ties out
+    exactly.
 
     ``with_rank=True`` appends the 1-based probe rank (round-13):
-    rank 1 is the vector's NEAREST cell under the same (d2, cid) tie
-    contract as :func:`ivf_assign`, so ``filter(rank = 1)`` IS the IVF
-    assignment — composed consumers (ivf_topk, ann_ivfpq_topk) derive
-    assign + probes from ONE corpus pass instead of two."""
-    import numpy as np
-    import pandas as pd
-
+    rank 1 is the vector's NEAREST cell, i.e. :func:`ivf_assign`, so
+    composed consumers (ivf_topk, ann_ivfpq_topk) derive assign +
+    probes from ONE corpus pass instead of two."""
     cids, cmat = _centers_matrix(centers)
     c2 = (cmat * cmat).sum(axis=1)
     bc = emb.sparkSession.sparkContext.broadcast((cids, cmat, c2))
@@ -480,12 +443,17 @@ def ivf_probes(
     )
     p = int(nprobe)
 
+    def smallest(d, q):
+        if q == 1:
+            return np.argmin(d, axis=1)[:, None]
+        return np.argsort(d, axis=1, kind="stable")[:, :q]
+
     def op(batches):
         k_ids, cm, cn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            x = np.vstack(pdf["_v"].to_numpy())
+            ids, x = _decode(batch, cm.shape[1], id_col, "_v")
             x2 = (x * x).sum(axis=1)
             b = len(x)
             cand_d, cand_c = [], []
@@ -497,8 +465,7 @@ def ivf_probes(
                     + cn[lo : lo + chunk][None, :]
                     - 2.0 * (x @ cm[lo : lo + chunk].T),
                 )
-                pp = min(p, d2.shape[1])
-                idx = np.argsort(d2, axis=1, kind="stable")[:, :pp]
+                idx = smallest(d2, min(p, d2.shape[1]))
                 sel_d = np.take_along_axis(d2, idx, axis=1)
                 sel_c = k_ids[lo + idx]
                 # keep the chunk block cid-ascending so the final stable
@@ -508,23 +475,18 @@ def ivf_probes(
                 cand_c.append(np.take_along_axis(sel_c, ordc, axis=1))
             all_d = np.concatenate(cand_d, axis=1)
             all_c = np.concatenate(cand_c, axis=1)
-            pick = np.argsort(all_d, axis=1, kind="stable")[:, :p]
+            pick = smallest(all_d, min(p, all_d.shape[1]))
             out_c = np.take_along_axis(all_c, pick, axis=1)
             n_out = out_c.shape[1]
-            cols = {
-                "q_id": np.repeat(
-                    pdf[id_col].to_numpy(dtype=np.int64), n_out
-                ),
-                "cid": out_c.reshape(-1),
-            }
+            cols = {"q_id": np.repeat(ids, n_out), "cid": out_c.reshape(-1)}
             if with_rank:
                 cols["rank"] = np.tile(
                     np.arange(1, n_out + 1, dtype=np.int64), b
                 )
-            yield pd.DataFrame(cols)
+            yield pa.RecordBatch.from_pydict(cols)
 
     schema = "q_id long, cid long" + (", rank long" if with_rank else "")
-    return base.mapInPandas(op, schema=schema)
+    return base.mapInArrow(op, schema=schema)
 
 
 def ivf_topk(
@@ -753,40 +715,34 @@ def _grouped_topk_query_broadcast(
     each — every corpus array crosses the wire exactly once.  Scores
     use the same normalized-matrix numpy dot as the full-broadcast
     path, so the two agree wherever both apply."""
-    import numpy as np
-    import pandas as pd
-
-    qpdf = (
-        base.join(
-            F.broadcast(query_ids.select(F.col(id_col))), id_col, "leftsemi"
+    unit = _unit(base, id_col)
+    bc = base.sparkSession.sparkContext.broadcast(
+        _collect_block(
+            unit.join(
+                F.broadcast(query_ids.select(F.col(id_col))),
+                id_col,
+                "leftsemi",
+            ),
+            id_col,
+            "u",
         )
-        .orderBy(id_col)
-        .toPandas()
     )
-    q_ids_sorted = qpdf[id_col].to_numpy()
-    qmat = np.array(qpdf["v"].tolist(), dtype=np.float64)
-    qmat = qmat / qpdf["nrm"].to_numpy()[:, None]
-    bc = base.sparkSession.sparkContext.broadcast((q_ids_sorted, qmat))
     nbrs = (
         cand.distinct()
         .groupBy("neighbor")
         .agg(F.collect_list("vec_id").alias("qlist"))
     )
-    unit_n = base.select(F.col(id_col).alias("neighbor"), "v", "nrm")
-    joined = nbrs.join(unit_n, "neighbor")
+    joined = nbrs.join(unit.withColumnRenamed(id_col, "neighbor"), "neighbor")
 
     def score(batches):
         ids, qm = bc.value
         for b in batches:
-            if len(b) == 0:
-                continue
-            nu = np.array(b["v"].tolist(), dtype=np.float64)
-            nu = nu / b["nrm"].to_numpy()[:, None]
+            nbr, nu = _decode(b, None, "neighbor", "u")
+            ql = b.column("qlist")
+            offs, flat = np.asarray(ql.offsets), np.asarray(ql.values)
             out_v, out_n, out_c = [], [], []
-            for row_i, (nbr, qlist) in enumerate(
-                zip(b["neighbor"].to_numpy(), b["qlist"])
-            ):
-                qe = np.asarray(qlist, dtype=np.int64)
+            for row_i in range(b.num_rows):
+                qe = flat[offs[row_i] : offs[row_i + 1]]
                 qi = np.searchsorted(ids, qe)
                 # membership guard: unlike the full-corpus broadcast
                 # path, this array covers only the query subset — a
@@ -804,9 +760,9 @@ def _grouped_topk_query_broadcast(
                     )
                 cos = qm[qi] @ nu[row_i]
                 out_v.extend(qe)
-                out_n.extend([nbr] * len(qe))
+                out_n.extend([nbr[row_i]] * len(qe))
                 out_c.extend(cos)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "vec_id": np.asarray(out_v, dtype=np.int64),
                     "neighbor": np.asarray(out_n, dtype=np.int64),
@@ -814,7 +770,7 @@ def _grouped_topk_query_broadcast(
                 }
             )
 
-    scored = joined.mapInPandas(
+    scored = joined.mapInArrow(
         score, schema="vec_id long, neighbor long, cosine double"
     )
     w = Window.partitionBy("vec_id").orderBy(
@@ -845,10 +801,7 @@ def _grouped_topk_join(
     one codegen'd fold — JVM-side, no Python in the hot path — and
     window-rank per query. Three shuffles total (distinct, join keys,
     window), each linear in the candidate count, never in corpus²."""
-    unit = base.select(
-        F.col(id_col),
-        F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("u"),
-    )
+    unit = _unit(base, id_col)
     ql = unit.select(F.col(id_col).alias("vec_id"), F.col("u").alias("qu"))
     nl = unit.select(F.col(id_col).alias("neighbor"), F.col("u").alias("nu"))
     # codegen'd unrolled dot when the dimension is known (bit-identical
@@ -891,24 +844,20 @@ def _grouped_topk_broadcast(
     emits top-k directly (cosine desc, neighbor asc — the same ordering
     a row_number window would apply, minus the extra distinct shuffle
     and per-key sort)."""
-    import numpy as np
-    import pandas as pd
-
-    pdf_all = base.orderBy(id_col).toPandas()
-    ids_sorted = pdf_all[id_col].to_numpy()
-    mat = np.array(pdf_all["v"].tolist(), dtype=np.float64)
-    mat = mat / pdf_all["nrm"].to_numpy()[:, None]
-    bc = base.sparkSession.sparkContext.broadcast((ids_sorted, mat))
+    bc = base.sparkSession.sparkContext.broadcast(
+        _collect_block(_unit(base, id_col), id_col, "u")
+    )
     grouped = cand.groupBy("vec_id").agg(F.collect_set("neighbor").alias("nbrs"))
 
     def topk(batches):
         all_ids, m = bc.value
         for b in batches:
-            if len(b) == 0:
-                continue
+            vids = np.asarray(b.column("vec_id"), dtype=np.int64)
+            nc = b.column("nbrs")
+            offs, flat = np.asarray(nc.offsets), np.asarray(nc.values)
             vs, ns, cs, rs = [], [], [], []
-            for vid, nbrs in zip(b["vec_id"].to_numpy(), b["nbrs"]):
-                nb = np.sort(np.asarray(nbrs, dtype=np.int64))
+            for row_i, vid in enumerate(vids):
+                nb = np.sort(flat[offs[row_i] : offs[row_i + 1]])
                 q = m[np.searchsorted(all_ids, vid)]
                 cos = m[np.searchsorted(all_ids, nb)] @ q
                 order = np.lexsort((nb, -cos))[:k]
@@ -916,7 +865,7 @@ def _grouped_topk_broadcast(
                 ns.extend(nb[order])
                 cs.extend(cos[order])
                 rs.extend(range(1, len(order) + 1))
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "vec_id": np.asarray(vs, dtype=np.int64),
                     "neighbor": np.asarray(ns, dtype=np.int64),
@@ -925,7 +874,7 @@ def _grouped_topk_broadcast(
                 }
             )
 
-    return grouped.mapInPandas(
+    return grouped.mapInArrow(
         topk, schema="vec_id long, neighbor long, cosine double, rank int"
     )
 
@@ -1126,21 +1075,17 @@ def pq_encode(
     EAGER AT CONSTRUCTION: the codebook is collected to the driver and
     broadcast when this function is CALLED (a hash-sample Spark job),
     not when the returned DataFrame first executes — the broadcast
-    must exist before the mapInPandas closure serializes. Callers that
+    must exist before the Arrow closure serializes. Callers that
     already hold the codebook relation (ann_ivfpq_topk's ADC LUT)
     pass it via ``books`` so the sampling job runs once, mirroring the
     ``_centers_matrix`` collect-once tuple pattern."""
-    import numpy as np
-    import pandas as pd
-
     sub_dim = dim // m
     if books is None:
         books = pq_codebooks(emb, m, k, seed, id_col, vec_col, dim)
-    bpdf = books.toPandas()
-    kk = int(bpdf["code"].max()) + 1
-    bmat = np.zeros((m, kk, sub_dim), dtype=np.float64)
-    for mi, code, sub in zip(bpdf["m"], bpdf["code"], bpdf["sub"]):
-        bmat[int(mi), int(code)] = np.asarray(sub, dtype=np.float64)
+    bt = books.toArrow()
+    codes, subs = _decode(bt, sub_dim, "code", "sub")
+    bmat = np.zeros((m, int(codes.max()) + 1, sub_dim), dtype=np.float64)
+    bmat[np.asarray(bt.column("m"), dtype=np.int64), codes] = subs
     bc = emb.sparkSession.sparkContext.broadcast(bmat)
     base = ensure_min_partitions(
         emb.select(
@@ -1152,33 +1097,29 @@ def pq_encode(
         bm = bc.value
         n_m, n_k, sd = bm.shape
         b2 = (bm * bm).sum(axis=2)  # (m, k)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            x = np.vstack(pdf["_v"].to_numpy())
-            b = len(x)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            frames = []
+            ids, x = _decode(batch, None, id_col, "_v")
+            picked, picked_d2 = [], []
             for mi in range(n_m):
                 s = x[:, mi * sd : (mi + 1) * sd]
                 s2 = (s * s).sum(axis=1)
                 d2 = s2[:, None] + b2[mi][None, :] - 2.0 * (s @ bm[mi].T)
                 j = np.argmin(d2, axis=1)
                 diff = s - bm[mi][j]
-                d2_sel = (diff * diff).sum(axis=1)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            id_col: ids,
-                            "m": np.full(b, mi, dtype=np.int64),
-                            "code": j.astype(np.int64),
-                            "d2": d2_sel,
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+                picked.append(j)
+                picked_d2.append((diff * diff).sum(axis=1))
+            yield pa.RecordBatch.from_pydict(
+                {
+                    id_col: np.tile(ids, n_m),
+                    "m": np.repeat(np.arange(n_m, dtype=np.int64), len(ids)),
+                    "code": np.concatenate(picked).astype(np.int64),
+                    "d2": np.concatenate(picked_d2),
+                }
+            )
 
-    return base.mapInPandas(
+    return base.mapInArrow(
         op, schema=f"{id_col} long, m long, code long, d2 double"
     )
 
@@ -1400,8 +1341,6 @@ def kmeans_lloyd(
         )
     if n_centers == "auto":
         n_centers = auto_n_centers(emb)
-    import numpy as np
-
     from mahout_samsara_book_spark.cache import track
 
     centers = _centers_matrix(
@@ -1410,7 +1349,7 @@ def kmeans_lloyd(
     embp = ensure_min_partitions(emb)
     v = F.col(vec_col).cast("array<double>")
     assign = None
-    pdf = None
+    coo_t = None
     for it in range(iters):
         assign = ivf_assign(embp, centers, id_col, vec_col)
         if it == iters - 1:
@@ -1425,19 +1364,15 @@ def kmeans_lloyd(
             .groupBy("cid", "pos")
             .agg(F.avg("x").alias("c"))
         )
-        pdf = coo.toPandas()
-        # vectorized COO → matrix: pivot sorts cid rows and pos columns
-        # ascending; every surviving cluster carries all dims, so the
-        # frame is dense
-        wide = pdf.pivot(index="cid", columns="pos", values="c")
-        centers = (
-            wide.index.to_numpy(dtype=np.int64),
-            wide.to_numpy(dtype=np.float64),
-        )
+        # COO → matrix: rows in ascending (cid, pos) order; every
+        # surviving cluster carries all dims, so the block is dense
+        coo_t = coo.toArrow().sort_by([("cid", "ascending"), ("pos", "ascending")])
+        cids = np.unique(np.asarray(coo_t.column("cid"), dtype=np.int64))
+        c = np.asarray(coo_t.column("c"), dtype=np.float64)
+        centers = (cids, c.reshape(len(cids), -1))
     sizes = assign.groupBy("cid").agg(F.count("*").alias("n_members"))
-    spark = emb.sparkSession
-    final_coo = spark.createDataFrame(
-        pdf[["cid", "pos", "c"]], schema="cid long, pos int, c double"
+    final_coo = emb.sparkSession.createDataFrame(
+        coo_t, schema="cid long, pos int, c double"
     )
     return final_coo.join(sizes, "cid")
 

@@ -319,18 +319,16 @@ def test_decode_honours_slice_offsets():
     empty = _encode(np.arange(0), np.zeros((0, 4)))
     assert empty.schema.field(FEAT).type == pa.list_(pa.float64())
     assert _decode(empty, 4)[1].shape == (0, 4)
-
-
-@pytest.fixture
-def small_arrow_batches(spark):
-    """Seven-row Arrow batches: every partition arrives as several."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    # other column names, width taken from the first row
+    named = batch.rename_columns(["vec_id", "emb"])
+    keys, got = _decode(named, key="vec_id", vec="emb")
+    assert list(keys) == [103, 104, 105, 106]
+    assert np.array_equal(got, block[3:7])
+    ragged = pa.RecordBatch.from_pydict(
+        {"id": [0, 1], "v": [[1.0, 2.0, 3.0], [1.0, 2.0]]}
+    )
+    with pytest.raises(ValueError, match="not all ncol=3 wide"):
+        _decode(ragged, key="id", vec="v")
 
 
 def test_codec_block_ops_on_many_batches(spark, mx, small_arrow_batches):
@@ -394,15 +392,33 @@ def test_atx_rejects_non_positional_keys(spark, mx):
 
 
 # The block format has one owner: the codec in drm.py. These modules
-# read and write DRM blocks and must go through it.
-CODEC_MODULES = ("drm/drm.py", "algorithms/regression.py")
+# read and write vector blocks and must go through it.
+CODEC_MODULES = (
+    "drm/drm.py",
+    "algorithms/regression.py",
+    "operators/similarity.py",
+    "operators/dedup.py",
+    "operators/selection.py",
+)
+# drm.py's and regression.py's toPandas() collects are scalar results,
+# not vector decodes; the operator modules collect vectors only
+TOPANDAS_MODULES = CODEC_MODULES[2:]
 
 
 def _codec_violations(rel: str, tree: ast.AST) -> list[str]:
     out = []
     for node in ast.walk(tree):
-        if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
-            out.append(f"{rel}:{node.lineno} mapInPandas")
+        if isinstance(node, ast.Attribute) and node.attr in (
+            "mapInPandas",
+            "applyInPandas",
+        ):
+            out.append(f"{rel}:{node.lineno} {node.attr}")
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr == "toPandas"
+            and rel in TOPANDAS_MODULES
+        ):
+            out.append(f"{rel}:{node.lineno} toPandas")
         elif (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
@@ -434,5 +450,8 @@ def test_codec_scan_flags_the_list_detour():
     src = (
         "import pandas as pd\nfrom pandas import DataFrame\n"
         "df.mapInPandas(f, schema=s)\nrow.tolist()\n"
+        "df.groupBy(k).applyInPandas(f, schema=s)\ndf.toPandas()\n"
     )
-    assert len(_codec_violations("drm/drm.py", ast.parse(src))) == 4
+    tree = ast.parse(src)
+    assert len(_codec_violations("operators/dedup.py", tree)) == 6
+    assert len(_codec_violations("drm/drm.py", tree)) == 5

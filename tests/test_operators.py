@@ -298,9 +298,7 @@ def test_multimodal_real_codec_raises(spark, dup_docs):
 
 
 def test_ensure_min_partitions_contract(spark):
-    from mahout_samsara_book_spark.operators.similarity import (
-        ensure_min_partitions,
-    )
+    from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 
     narrow = spark.range(1000).repartition(2)
     widened = ensure_min_partitions(narrow)

@@ -327,3 +327,22 @@ def test_exact_substr_spans_semantics(spark):
     assert (r.doc_a, r.doc_b, r.n_shared) == (0, 1, 1)
     # doc 0's shared window starts after its 3 prefix tokens; doc 1's at 0
     assert (r.a_start, r.b_start) == (3, 0)
+
+
+def test_exact_substr_spans_tokenizes_once_per_scan(spark):
+    """The short-document guard must not tokenize twice: a filter on
+    the token count is pushed below the projection, where it re-runs
+    the tokenize split for every document."""
+    import re
+
+    from mahout_samsara_book_spark.operators.dedup import exact_substr_spans
+
+    docs = spark.createDataFrame(
+        [(0, "a b c d"), (1, "a b c d e")], "doc_id long, text string"
+    )
+    plan = (
+        exact_substr_spans(docs, window=4)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    scans = len(re.findall(r"LogicalRDD|LocalRelation|Relation\[", plan))
+    assert scans > 0 and plan.count("split(") == scans

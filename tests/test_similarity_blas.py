@@ -178,10 +178,11 @@ def test_unrolled_dot_bit_identical_to_fold(spark):
     assert ragged.fold is None and ragged.unrolled is None
 
 
-def test_verify_topk_join_matches_broadcast(spark):
-    """The two verify strategies must agree row-for-row on the same
+def test_verify_topk_join_matches_broadcast(spark, small_arrow_batches):
+    """The verify strategies must agree row-for-row on the same
     candidate stream — the join path is what runs past the broadcast
-    byte limit, so its scores/ranks must be indistinguishable."""
+    byte limit, so its scores/ranks must be indistinguishable. Seven-row
+    Arrow batches make every partition arrive as several."""
     import random
 
     from pyspark.sql import functions as F
@@ -219,3 +220,153 @@ def test_verify_topk_join_matches_broadcast(spark):
         ).collect()
     )
     assert q == b
+
+
+# --------------------------------------------------------------------- #
+# the embedding operators on the Arrow block codec, under seven-row
+# batches (small_arrow_batches): every task sees several batches
+# --------------------------------------------------------------------- #
+
+
+def test_cosine_topk_broadcast_matches_pairs(spark, small_arrow_batches):
+    import random
+
+    from mahout_samsara_book_spark.operators.similarity import cosine_topk
+
+    rng = random.Random(31)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def run(strategy):
+        return sorted(
+            (r.vec_id, r.neighbor, f"{r.cosine:.7e}", r["rank"])
+            for r in cosine_topk(emb, k=3, strategy=strategy).collect()
+        )
+
+    got = run("broadcast")
+    assert got == run("pairs") and len(got) == 180
+
+
+def test_broadcast_path_rejects_ragged_embeddings(spark):
+    from mahout_samsara_book_spark.operators.similarity import cosine_topk
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, [1.0, 2.0]), (2, [3.0, 2.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="not all ncol=3 wide"):
+        cosine_topk(emb, k=1, strategy="broadcast")
+
+
+def test_embedding_near_dups_broadcast_matches_pairs(
+    spark, small_arrow_batches
+):
+    import random
+
+    from mahout_samsara_book_spark.operators.dedup import embedding_near_dups
+
+    rng = random.Random(5)
+    base = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(40)]
+    # every fourth vector gets a near-copy
+    near = [
+        (100 + i, [x + rng.uniform(-0.01, 0.01) for x in base[i]])
+        for i in range(0, 40, 4)
+    ]
+    emb = spark.createDataFrame(
+        list(enumerate(base)) + near, "vec_id long, embedding array<double>"
+    )
+
+    def run(strategy):
+        return sorted(
+            (r.vec_a, r.vec_b, f"{r.cosine:.7e}")
+            for r in embedding_near_dups(
+                emb, threshold=0.95, strategy=strategy
+            ).collect()
+        )
+
+    got = run("broadcast")
+    assert got == run("pairs")
+    assert {(i, 100 + i) for i in range(0, 40, 4)} <= {(a, b) for a, b, _ in got}
+
+
+def test_decontaminate_embeddings_matches_numpy(spark, small_arrow_batches):
+    import numpy as np
+
+    from mahout_samsara_book_spark.operators.selection import (
+        decontaminate_embeddings,
+    )
+
+    rng = np.random.default_rng(17)
+    t = rng.normal(size=(50, 6))
+    e = np.vstack([t[[3, 11, 29]] + rng.normal(scale=0.01, size=(3, 6)),
+                   rng.normal(size=(8, 6))])
+    t[7] = 0.0  # zero-norm train vector
+    e[5] = 0.0  # zero-norm eval vector
+
+    def frame(m, id0):
+        return spark.createDataFrame(
+            [(id0 + i, [float(x) for x in row]) for i, row in enumerate(m)],
+            "vec_id long, embedding array<double>",
+        )
+
+    got = {
+        (r.train_id, r.eval_id): r.cosine
+        for r in decontaminate_embeddings(
+            frame(t, 0), frame(e, 1000), threshold=0.9
+        ).collect()
+    }
+    want = {}
+    for i, tv in enumerate(t):
+        for j, ev in enumerate(e):
+            nt, ne = np.linalg.norm(tv), np.linalg.norm(ev)
+            if nt > 0 and ne > 0 and round(tv @ ev / (nt * ne), 9) >= 0.9:
+                want[(i, 1000 + j)] = tv @ ev / (nt * ne)
+    assert set(got) == set(want)
+    assert {(3, 1000), (11, 1001), (29, 1002)} <= set(got)
+    for key, cos in want.items():
+        assert got[key] == pytest.approx(cos, rel=1e-12)
+
+
+def test_semantic_dedup_matches_numpy(spark, small_arrow_batches):
+    import numpy as np
+
+    from mahout_samsara_book_spark.operators.dedup import semantic_dedup
+    from mahout_samsara_book_spark.operators.similarity import (
+        _centers_matrix,
+        ivf_centers,
+    )
+
+    rng = np.random.default_rng(23)
+    x = rng.normal(size=(60, 8))
+    for src, dst in [(0, 30), (0, 31), (5, 40), (12, 50), (50, 55)]:
+        x[dst] = x[src] + rng.normal(scale=1e-3, size=8)
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+        "vec_id long, embedding array<double>",
+    )
+    got = {
+        r.vec_id: (r.keep, r.rep)
+        for r in semantic_dedup(emb, n_centers=4, threshold=0.99).collect()
+    }
+    # reference: nearest center, within-cluster cosine pairs, min-id
+    # representative of each connected group
+    cids, cm = _centers_matrix(ivf_centers(emb, 4, 5))
+    cell = cids[np.argmin(((x[:, None, :] - cm[None]) ** 2).sum(-1), axis=1)]
+    u = x / np.linalg.norm(x, axis=1, keepdims=True)
+    rep = list(range(len(x)))
+
+    def find(i):
+        while rep[i] != i:
+            i = rep[i]
+        return i
+
+    for i in range(len(x)):
+        for j in range(i + 1, len(x)):
+            if cell[i] == cell[j] and u[i] @ u[j] >= 0.99:
+                a, b = sorted((find(i), find(j)))
+                rep[b] = a
+    want = {i: (find(i) == i, find(i)) for i in range(len(x))}
+    assert got == want
+    assert sum(not keep for keep, _ in got.values()) >= 3

@@ -378,7 +378,7 @@ def main() -> int:
                     "sort (round-7: the relational corpus × M·K scored "
                     "relation + (vec, m) window shuffled 25.6M rows at "
                     "sf10)",
-                    "ArrowEvalPython" in p16 or "MapInPandas" in p16,
+                    "ArrowEvalPython" in p16 or "MapInArrow" in p16,
                 ),
                 (
                     "no corpus-sized shuffle or per-row window anywhere",
