@@ -33,9 +33,11 @@ from mahout_samsara_book_spark.algorithms.regression import (
     normal_equation_sums,
 )
 from mahout_samsara_book_spark.drm.drm import Drm
+from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 from mahout_samsara_book_spark.sources.tables import (
     LINEITEM_FEATURES,
     lineitem_drm,
+    lineitem_key,
     load_table,
 )
 
@@ -172,7 +174,6 @@ def _q_drm_ssr(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from mahout_samsara_book_spark.algorithms.regression import ssr_xy
-    from mahout_samsara_book_spark.sources.tables import lineitem_key
 
     li = load_table(spark, sf_dir, "lineitem")
     src = li.select(
@@ -201,9 +202,18 @@ def _q_coeff_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, "pos long, beta string, se string, t_stat string")
 
 
+def _wide_lineitem_drm(spark: SparkSession, sf_dir: str) -> Drm:
+    """The lineitem DRM over a widened scan, for queries whose wall is
+    per-row block work and explode-to-scalars formatting: the fixture
+    is one row group, so its scan alone would run that stage on one
+    core."""
+    li = ensure_min_partitions(load_table(spark, sf_dir, "lineitem"))
+    return Drm.from_columns(li, lineitem_key(), LINEITEM_FEATURES)
+
+
 def _q_abs_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A16 column slice + B8 scalar op + A19 dabs, exploded to scalars."""
-    d = lineitem_drm(spark, sf_dir, parallel=True).slice_cols(1, 4).scalar_op("-", 1.0).abs()
+    d = _wide_lineitem_drm(spark, sf_dir).slice_cols(1, 4).scalar_op("-", 1.0).abs()
     return d.df.select(
         "row_id", F.posexplode("features").alias("pos", "v")
     ).select("row_id", F.col("pos").cast("long").alias("pos"), sci(F.col("v")).alias("v"))
@@ -251,7 +261,7 @@ def _q_mmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul, zero shuffle). Row keys preserved, duplicates included."""
     import numpy as np
 
-    a = lineitem_drm(spark, sf_dir, parallel=True)
+    a = _wide_lineitem_drm(spark, sf_dir)
     b = Drm.from_numpy(spark, np.array(_MMUL_B))
     out = a.mmul(b)
     return out.df.select(
@@ -330,7 +340,7 @@ def _q_point_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A17 drmSampleKRows: deterministic seeded top-k over the portable
     md5 hash — the DuckDB oracle replays the identical ordering."""
-    block = lineitem_drm(spark, sf_dir, parallel=True).sample_k_rows(10, seed=42)
+    block = _wide_lineitem_drm(spark, sf_dir).sample_k_rows(10, seed=42)
     rows = [tuple(float(x) for x in r) for r in block]
     return spark.createDataFrame(rows, "f0 double, f1 double, f2 double, f3 double")
 
@@ -518,7 +528,7 @@ def _q_map_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary numpy; the oracle replays the per-row semantics in SQL."""
     import numpy as np
 
-    d = lineitem_drm(spark, sf_dir, parallel=True)
+    d = _wide_lineitem_drm(spark, sf_dir)
 
     def center_rows(keys, block):
         return keys, block - block.mean(axis=1, keepdims=True)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 from mahout_samsara_book_spark.sources.tables import load_table
 
 from mahout_samsara_book_spark.operators.hashing import h60_sql
@@ -1715,7 +1716,7 @@ def q_rel_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-format-free and engine-portable by construction."""
     from mahout_samsara_book_spark.operators.hashing import h60
 
-    li = load_table(spark, sf_dir, "lineitem", parallel=True)
+    li = ensure_min_partitions(load_table(spark, sf_dir, "lineitem"))
     rowkey = F.concat_ws(
         ":",
         F.col("l_orderkey").cast("string"),

@@ -55,7 +55,8 @@ def select_training_docs(
     # identical subtree) instead of each interior operator re-widening
     # its own projection of the same small scan — the r7 A/B's ~1.4 s
     # guard overhead was 3 stacked exchanges of one corpus. Interior
-    # ensure_min_partitions calls see the already-wide plan and no-op.
+    # ensure_min_partitions calls see the entry repartition's exchange
+    # in the plan and return their input as it is, without running it.
     from mahout_samsara_book_spark.partitioning import (
         ensure_min_partitions,
     )

@@ -1224,7 +1224,9 @@ def ann_ivfpq_topk(
     members = pr.filter(F.col("rank") == 1).select(
         F.col("q_id").alias("neighbor"), F.col("cid")
     )
-    probe_src = emb
+    # widened before the semi-join below: the joined plan holds an
+    # exchange, so pq_scored's widen would leave it at the scan's width
+    probe_src = ensure_min_partitions(emb)
     probes = pr.select("q_id", "cid")
     if query_ids is not None:
         # bounded query set: semi-restrict the probe list and the ADC
@@ -1430,9 +1432,10 @@ def ivf_topk_persisted(
     members = spark.read.parquet(path + "/assign").select(
         F.col(id_col).alias("neighbor"), "cid"
     )
-    qside = emb
+    # widened before the semi-join, as in ann_ivfpq_topk
+    qside = ensure_min_partitions(emb)
     if query_ids is not None:
-        qside = emb.join(
+        qside = qside.join(
             F.broadcast(query_ids.select(id_col)), id_col, "leftsemi"
         )
     probes = ivf_probes(qside, cm, nprobe, id_col, vec_col)

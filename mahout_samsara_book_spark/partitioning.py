@@ -1,152 +1,71 @@
-"""Scan-parallelism guard shared across operators.
+"""The package's one partition-width rule.
 
-A whole fixture table fits ONE ``maxPartitionBytes`` split, and parquet
-row groups are the splitting floor — so a small file arrives as a
-single scan partition and every narrow stage Catalyst pipelines onto it
-(tokenize/explode, quantize, candidate generation) runs on one core
-regardless of cluster size. ``ensure_min_partitions`` widens such
-inputs to the session's default parallelism; on any real-scale table
-(more splits than cores) it is a structural no-op, so the guard costs
-nothing at 100 TB while keeping small-corpus throughput scan-parallel.
+Samsara decides a DRM's width once, at its source
+(``drmParallelize(mx, numPartitions)``); :func:`ensure_min_partitions`
+is that decision for every Spark input the package widens, and no other
+module reads ``defaultParallelism`` or sets the scan split size.
+
+A small parquet input arrives as a few scan partitions, and a parquet
+row group is the smallest unit a scan task can read: Spark may cut a
+one-row-group file into several byte-range splits, but only the split
+holding the row group's midpoint reads rows. Every stage Catalyst
+pipelines onto such a scan (tokenize/explode, quantize, candidate
+generation) then runs on one core. The rule widens those inputs to the
+session's default parallelism; a real-scale table has more splits and
+row groups than cores, and the call adds nothing.
 """
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
-_SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+def _row_group_count(files: list[str], stop: int) -> int:
+    """Row groups across parquet ``files``, read from their footers in
+    this process (no Spark job) and counted up to ``stop``. -1 when the
+    layout is unknown: no input files, a path that is not a local file
+    (an object store), or a file that is not parquet."""
+    rg = 0
+    for f in files:
+        if rg >= stop:
+            break
+        u = urlparse(f)
+        path = unquote(u.path)
+        if u.scheme not in ("", "file") or u.netloc or not os.path.isfile(path):
+            return -1
+        try:
+            rg += pq.read_metadata(path).num_row_groups
+        except (OSError, ValueError):  # unreadable or not parquet
+            return -1
+    return rg if files else -1
 
 
-def _parse_bytes(s: str) -> int:
-    """Parse Spark size strings: '134217728', '8m', '128MB'."""
-    s = s.strip().lower().removesuffix("b")
-    if s and s[-1] in _SIZE_SUFFIX:
-        return int(float(s[:-1]) * _SIZE_SUFFIX[s[-1]])
-    return int(s)
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
+    """``df``, repartitioned to the session's default parallelism when
+    its scan is narrower than that; otherwise ``df`` itself.
 
+    Decided from the plan alone, without running a Spark job:
 
-def _trusted_leaf_estimate(jplan) -> int:
-    """Largest ``sizeInBytes`` over the leaves whose estimate the widen
-    guard can TRUST, i.e. excluding (round-8, ADVICE):
-
-    - leaves under the broadcast-hinted side of a join — the build side
-      never streams, so its size says nothing about scan parallelism of
-      the streamed stage;
-    - partition-prunable scans that sit under an ANCESTOR Filter
-      referencing one of their partition columns — the logical leaf
-      stat is the FULL table size, but physical planning may prune the
-      scan to a sliver (partition pruning happens after the logical
-      stats are struck).
-
-    Round-9 (ADVICE r8): the filter-reference check is scoped to the
-    leaf's own ancestor path, not a plan-global set — a Filter on a
-    same-named column of an UNRELATED table (the other side of a join)
-    no longer distrusts this leaf, which previously forced the exact
-    ``df.rdd`` probe on plans the stats short-circuit handles.
-
-    Untrusted leaves simply don't contribute; when nothing trustworthy
-    is large, the caller falls through to the exact probe.
-    """
-    best = 0
-    # single walk carrying (node, under-broadcast?, ancestor Filter refs
-    # on the path root→node); refs accumulate only while DESCENDING, so
-    # each leaf sees exactly the Filters that sit above it
-    stack = [(jplan, False, frozenset())]
-    while stack:
-        node, under_bc, path_refs = stack.pop()
-        name = node.getClass().getSimpleName()
-        if name == "Filter":
-            refs = node.condition().references().toSeq()
-            path_refs = path_refs | {
-                refs.apply(i).name() for i in range(refs.size())
-            }
-        ch = node.children()
-        if ch.isEmpty():
-            if under_bc:
-                continue
-            part_cols: set[str] = set()
-            if name == "LogicalRelation":
-                try:
-                    part_cols = set(
-                        node.relation().partitionSchema().fieldNames()
-                    )
-                except Exception:  # noqa: BLE001 — non-file relation
-                    part_cols = set()
-            if part_cols & path_refs:
-                continue  # prunable under a partition filter: distrust
-            best = max(best, int(node.stats().sizeInBytes()))
-            continue
-        if name == "Join":
-            h = node.hint()
-            lbc = "broadcast" in h.leftHint().toString().lower()
-            rbc = "broadcast" in h.rightHint().toString().lower()
-            stack.append((node.left(), under_bc or lbc, path_refs))
-            stack.append((node.right(), under_bc or rbc, path_refs))
-        else:
-            for i in range(ch.size()):
-                stack.append((ch.apply(i), under_bc, path_refs))
-    return best
-
-
-def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Small-file inputs arrive as one or two scan partitions (a whole
-    fixture table fits one ``maxPartitionBytes`` split), and every stage
-    Catalyst pipelines onto that scan — candidate self-joins, explode +
-    partial aggregation — then runs on ONE core regardless of cluster
-    size. Repartition up to the session's default parallelism when the
-    plan is below it; when the scan is already wide (any real-scale
-    table) this is a no-op, so no gratuitous shuffle at 100 TB.
-
-    Probe cost (round-6): the exact probe (``df.rdd.getNumPartitions``)
-    forces physical planning + RDD translation on the driver, which at
-    real scale is pure waste — the answer is always "already wide". So
-    Catalyst's *logical* size estimate short-circuits first, and since
-    round 7 the estimate is the LARGEST LEAF's ``sizeInBytes``, not the
-    full plan's: without column stats Catalyst sizes a join as the
-    product of its children, so a genuinely narrow post-join plan can
-    carry a huge full-plan estimate (a silent skip of the widen). A
-    leaf, by contrast, is a scan whose stats are real file bytes — if
-    one leaf alone spans ≥ target ``maxPartitionBytes`` splits, the
-    streamed side of any join stack on top of it is at least that wide
-    (shuffled stages get ``shuffle.partitions`` anyway), and the guard
-    returns without ever building a physical plan. Round-8: only
-    TRUSTED leaves count — broadcast-hinted join sides and
-    partition-prunable scans under partition filters are excluded (see
-    :func:`_trusted_leaf_estimate`), so a pruned-to-a-sliver scan or a
-    big broadcast build side can no longer silently defeat the widen. Only plausibly-small
-    inputs (fixtures, post-filter slivers, in-memory ranges whose stats
-    underestimate their partitioning) fall through to the exact probe —
-    measured at ~1-3 ms warm on such plans (SCALING.md round-6 note).
-    Streaming DataFrames pass through untouched: ``.rdd`` raises on
-    them and micro-batch sources manage their own parallelism.
+    - a streaming plan, or one whose physical plan is adaptive (it holds
+      an exchange, so its width is the exchange's, not the scan's),
+      comes back untouched;
+    - otherwise the width is the scan's partition count, or, when that
+      count reaches the target, the row-group count of its parquet
+      input files, since a split without a row group reads no rows.
     """
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    target = target or spark.sparkContext.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        max_split = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        # two-stage: the UNFILTERED max-leaf check is one py4j call and
-        # decides the common cases — below threshold means we fall to
-        # the exact probe regardless of trust, so the (py4j-per-node)
-        # trust walk only runs when it can actually change the outcome,
-        # i.e. when a naive read would SKIP the widen
-        leaves = plan.collectLeaves()
-        naive = max(
-            (
-                int(leaves.apply(i).stats().sizeInBytes())
-                for i in range(leaves.size())
-            ),
-            default=0,
-        )
-        if naive >= target * max_split:
-            if _trusted_leaf_estimate(plan) >= target * max_split:
-                return df
-    except Exception:  # noqa: BLE001 — stats are advisory; fall through
-        pass
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    width = qe.toRdd().getNumPartitions()
+    if width >= target:
+        rg = _row_group_count(df.inputFiles(), target)
+        if rg >= 0:
+            width = rg
+    return df.repartition(target) if width < target else df

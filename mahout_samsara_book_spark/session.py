@@ -4,6 +4,10 @@ Local-mode defaults follow the 100 TB posture scaled down: AQE on (runtime
 shuffle-partition coalescing + skew-join splitting), Arrow on (the Arrow
 record batch is our analog of Samsara's vertical block — SURVEY §1.2), UTC
 timezone pinned so the DuckDB oracle compares timestamps apples-to-apples.
+Scan splits keep Spark's own sizing, min(128 MB, max(4 MB open cost,
+input bytes / cores)); where a small input needs more
+tasks than its scan gives, ``partitioning.ensure_min_partitions``
+decides, so the session sets no split size.
 """
 
 from __future__ import annotations
@@ -50,15 +54,6 @@ def get_spark(
         # nanos and is a no-op for the current TIMESTAMP(MICROS) fixtures.
         # sources.tables.ts_us normalizes both representations.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Scan-split size scaled to the test SFs: the fixtures are single
-        # parquet files (sf1 lineitem ≈ 100 MB), and the 128 MB default
-        # hands an entire table to ONE scan task — every stage pipelined
-        # onto the scan (explode + partial agg, broadcast-join probe)
-        # then runs serially no matter how many cores local[32] has.
-        # 8 MB splits the biggest fixture ~16-way. A real cluster tunes
-        # this per deployment (at 100 TB the default's ~800k splits are
-        # already far beyond executor count).
-        .config("spark.sql.files.maxPartitionBytes", "8m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

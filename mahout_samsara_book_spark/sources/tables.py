@@ -70,9 +70,7 @@ def ts_us(ev: DataFrame, col: str = "ts") -> F.Column:
     return F.unix_micros(F.col(col).cast("timestamp"))
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, parallel: bool = False
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Base-table reader with a RESOLUTION memo (round 12, guide §6):
     every ``spark.read.parquet`` pays ~100 ms of driver work (file
     listing + footer schema read + relation resolution), and the bench
@@ -101,106 +99,12 @@ def load_table(
         spark.sparkContext.applicationId,
         path,
         source_fingerprint(sf_dir, name),
-        bool(parallel),
     )
     df = _TABLE_MEMO.get(key)
     if df is None:
         df = spark.read.parquet(path)
-        if parallel:
-            # consumer-requested scan-parallelism floor — see
-            # _scan_parallelism_floor for the gate and the measured
-            # win/lose split that makes this opt-in
-            df = _scan_parallelism_floor(spark, df, path)
         _TABLE_MEMO[key] = df
     return df
-
-
-def _scan_parallelism_floor(
-    spark: SparkSession, df: DataFrame, path: str
-) -> DataFrame:
-    """Parallelism floor for unsplittable parquet inputs (round 13,
-    guide §2.5 "input skew: one huge unsplittable file … repartition
-    immediately after the read").
-
-    A parquet ROW GROUP is the minimum split unit: byte-range splits
-    (``spark.sql.files.maxPartitionBytes``) that contain no row-group
-    midpoint produce EMPTY tasks, so a single-row-group file executes
-    every scan-pipelined stage — explode, tokenize, format, map-side
-    partial aggregation — on ONE core no matter the split size or
-    core count.  The driver's fixtures are exactly that (one row group
-    per table at every SF), which serialized the scan stage of every
-    query in the registry.
-
-    The gate is derived from the INPUT LAYOUT, not the box: it fires
-    only when the file's effective split count (row groups, summed
-    across part-files) is below the session's default parallelism and
-    the table is big enough for a shuffle to pay for itself.  At the
-    100 TB design point inputs carry thousands of row groups across
-    many part-files, the gate never fires, and no repartition is
-    added.  Filters and column pruning push through the round-robin
-    ``repartition`` to the scan unchanged (verified: PushedFilters /
-    ReadSchema identical), and every downstream result is
-    partition-invariant by the engine's determinism contract (seeded
-    portable hashes, never ``rand()``; float output formatting already
-    absorbs summation-order ULPs by the %.7e + nudge convention the
-    DuckDB oracle shares).
-
-    OPT-IN per consumer, not applied inside :func:`load_table`
-    (measured, interleaved A/B at sf0.1, tools/_r13_ab_floor.py):
-    pipelines whose wall is scan-side per-row compute with a large
-    materialized output (the DRM explode-to-scalars family) win
-    35%-2x, but iterative consumers that re-scan per round and collect
-    small results (bahmani) and window/aggregate consumers whose first
-    keyed exchange was the only shuffle (rel_percentiles, shingle
-    builds) LOSE 25-80% — the extra full-width round-robin exchange
-    costs more than the parallelism returns.  The floor is requested
-    exactly where the serial scan is the measured bottleneck
-    (``lineitem_drm(parallel=True)``)."""
-    par = spark.sparkContext.defaultParallelism
-    rg, total = _row_group_count(path)
-    if total < PAR_FLOOR_MIN_BYTES or rg <= 0 or rg >= par:
-        return df
-    return df.repartition(par)
-
-
-# below this total size the serial scan is cheaper than an exchange
-# (region/nation/supplier lookups); env-overridable for experiments.
-# Read at call time so A/B harnesses can toggle it in-process (clear
-# _TABLE_MEMO when doing so — memo entries bake the decision in).
-PAR_FLOOR_MIN_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_PAR_FLOOR_MIN_BYTES", "100000")
-)
-
-
-def _row_group_count(path: str) -> tuple[int, int]:
-    """(row groups, total bytes) across a parquet file or directory of
-    part-files — driver-side footer metadata only, no Spark job.  A
-    non-stat-able path (object store) returns (-1, 0): assume the
-    production layout is splittable and leave the plan alone."""
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-
-        files: list[str] = []
-        if os.path.isdir(path):
-            for root, _dirs, fs in os.walk(path):
-                files += [
-                    os.path.join(root, f)
-                    for f in fs
-                    if f.endswith(".parquet")
-                ]
-        elif os.path.exists(path):
-            files = [path]
-        else:
-            return (-1, 0)
-        rg = total = 0
-        for f in files:
-            rg += pq.ParquetFile(f).metadata.num_row_groups
-            total += os.path.getsize(f)
-        return (rg, total)
-    except Exception:  # pragma: no cover — metadata probe must not fail a read
-        return (-1, 0)
 
 
 _TABLE_MEMO: dict[tuple, DataFrame] = {}
@@ -277,24 +181,10 @@ def lineitem_key() -> F.Column:
     return (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
 
 
-def lineitem_drm(
-    spark: SparkSession, sf_dir: str, parallel: bool = False
-) -> Drm:
+def lineitem_drm(spark: SparkSession, sf_dir: str) -> Drm:
     """lineitem numerics as a 4-wide DRM keyed by the packed key —
-    the standard matrix fixture for A6-A15 oracle checks (FIXTURES.md).
-
-    ``parallel=True`` requests the scan-parallelism floor
-    (:func:`_scan_parallelism_floor`) for consumers whose wall is
-    scan-pipelined per-row compute (block ops + explode-to-scalars
-    formatting): a single-row-group fixture otherwise runs that whole
-    stage on one core.  Keep the default for iterative consumers that
-    re-scan per round and collect small results — the added exchange
-    is pure cost there (measured: bahmani +60%)."""
+    the standard matrix fixture for A6-A15 oracle checks (FIXTURES.md)."""
     li = load_table(spark, sf_dir, "lineitem")
-    if parallel:
-        li = _scan_parallelism_floor(
-            spark, li, f"{sf_dir}/lineitem.parquet"
-        )
     return Drm.from_columns(li, lineitem_key(), LINEITEM_FEATURES)
 
 

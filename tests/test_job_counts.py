@@ -1,11 +1,14 @@
-"""Spark job-count guards for the text-NB train and the dedup ingest:
-each corpus-sized reduction runs in one pass, so the number of jobs a
-call submits stays flat.  Counted per call with ``setJobGroup`` and
+"""Spark job-count guards for the text-NB train, the dedup ingest and
+the partition-width rule: each corpus-sized reduction runs in one pass,
+so the number of jobs a call submits stays flat, and deciding a width
+runs none.  Counted per call with ``setJobGroup`` and
 ``statusTracker().getJobIdsForGroup``.  Jobs submitted from pool
 threads (the two concurrent index writes of an append) do not carry
 the caller's job group and are not counted."""
 
 import itertools
+
+from pyspark.sql import functions as F
 
 from mahout_samsara_book_spark.algorithms.naive_bayes import train_text_nb
 from mahout_samsara_book_spark.operators.dedup import (
@@ -13,6 +16,7 @@ from mahout_samsara_book_spark.operators.dedup import (
     incremental_dedup_persisted,
     ingest_batch,
 )
+from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 
 _GROUPS = itertools.count()
 
@@ -72,3 +76,20 @@ def test_incremental_dedup_persisted_job_count(spark, tmp_path):
     # the same 6 jobs: the probe without the append
     n = _jobs(spark, lambda: incremental_dedup_persisted(batch, path).collect())
     assert n <= 6
+
+
+def test_ensure_min_partitions_runs_no_job(spark):
+    """A plan holding an exchange comes back as it is, and deciding so
+    runs nothing: reading such a plan's partition count would make the
+    adaptive planner run its exchange first."""
+    inputs = {
+        "repartition": spark.range(1000).repartition(2),
+        "group_by": spark.range(1000).groupBy(F.col("id") % 7).count(),
+        "broadcast_join": spark.range(1000).join(
+            F.broadcast(spark.range(10)), "id"
+        ),
+    }
+    for name, df in inputs.items():
+        out = []
+        assert _jobs(spark, lambda: out.append(ensure_min_partitions(df))) == 0, name
+        assert out[0] is df, name

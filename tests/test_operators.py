@@ -300,7 +300,7 @@ def test_multimodal_real_codec_raises(spark, dup_docs):
 def test_ensure_min_partitions_contract(spark):
     from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 
-    narrow = spark.range(1000).repartition(2)
+    narrow = spark.range(0, 1000, 1, 2)
     widened = ensure_min_partitions(narrow)
     assert widened.rdd.getNumPartitions() == (
         spark.sparkContext.defaultParallelism
@@ -313,59 +313,27 @@ def test_ensure_min_partitions_contract(spark):
     assert ensure_min_partitions(wide) is wide
 
 
-def test_trusted_leaf_estimate_pruning_and_broadcast(spark, tmp_path):
-    """The widen guard's logical-stats short-circuit must DISTRUST
-    (round-8, ADVICE): a partition-prunable scan under a partition
-    filter (the leaf stat is full-table bytes but the physical scan may
-    be a sliver) and any leaf on the broadcast-hinted side of a join
-    (the build side never streams)."""
+def test_ensure_min_partitions_widens_a_pruned_sliver(spark, tmp_path):
+    """A partition filter prunes a table's scan to one file; the widen
+    sees the pruned scan's width, not the table's."""
     from pyspark.sql import functions as F
 
-    from mahout_samsara_book_spark.partitioning import (
-        _trusted_leaf_estimate,
-    )
+    from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 
-    def est(df):
-        return _trusted_leaf_estimate(
-            df._jdf.queryExecution().optimizedPlan()
-        )
-
-    pt_path = str(tmp_path / "pt")
+    par = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "pt")
     (
-        spark.range(0, 50000)
+        spark.range(0, 50000, 1, par)
         .withColumn("p", (F.col("id") % 10).cast("int"))
+        .repartition("p")
         .write.partitionBy("p")
-        .parquet(pt_path)
+        .parquet(path)
     )
-    pt = spark.read.parquet(pt_path)
-    full = est(pt)
-    assert full > 0
-    # partition-column filter → leaf untrusted → 0 (falls to exact probe)
-    assert est(pt.filter(F.col("p") == 3)) == 0
-    # non-partition filter → leaf stays trusted
-    assert est(pt.filter(F.col("id") > 5)) == full
-
-    big, small = spark.range(1000).toDF("k"), spark.range(10).toDF("k")
-    # broadcast-hinted BIG side must not count; the streamed small side does
-    assert est(F.broadcast(big).join(small, "k")) < est(
-        big.join(F.broadcast(small), "k")
-    )
-
-    # round-9 (ADVICE r8): filter refs are scoped to the leaf's own
-    # ancestor path — a filter on a SAME-NAMED data column of an
-    # unrelated joined table must NOT distrust this leaf (previously a
-    # plan-global ref set forced the exact probe on such plans)
-    ot_path = str(tmp_path / "ot")
-    (
-        spark.range(0, 100)
-        .select(
-            F.col("id").alias("k2"),
-            (F.col("id") % 7).cast("int").alias("p"),
-        )
-        .write.parquet(ot_path)
-    )
-    ot = spark.read.parquet(ot_path).filter(F.col("p") == 3)
-    assert est(pt.join(ot, pt["id"] == ot["k2"])) == full
+    sliver = spark.read.parquet(path).filter(F.col("p") == 3)
+    out = ensure_min_partitions(sliver)
+    assert out is not sliver
+    assert out.rdd.getNumPartitions() == par
+    assert sorted(r["id"] for r in out.collect()) == list(range(3, 50000, 10))
 
 
 def test_ngram_jaccard_matches_python_sets(spark):

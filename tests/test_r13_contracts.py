@@ -92,55 +92,47 @@ def test_lsls_summary_probe_converges(spark):
     assert out == {(i, 0) for i in range(41)} | {(100, 100)}
 
 
-def test_scan_parallelism_floor(spark, tmp_path):
-    """_scan_parallelism_floor (guide §2.5 'unsplittable input'): a
-    single-row-group parquet file above the size floor gets a
-    round-robin repartition to defaultParallelism; a multi-row-group
-    layout at or above the parallelism, a tiny file, and a
-    non-stat-able path are all left alone — and the rows are identical
-    either way."""
+def test_widen_counts_row_groups(spark, tmp_path):
+    """Once a parquet scan's splits reach the target,
+    ensure_min_partitions counts the input's row groups: a one-row-group
+    file cut into many splits still reads its rows in one task, so it is
+    widened; a file with at least target row groups is left alone; an
+    object-store path has an unknown layout and does not raise; the rows
+    are identical either way."""
+    import os
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mahout_samsara_book_spark.sources import tables
+    from mahout_samsara_book_spark.partitioning import (
+        _row_group_count,
+        ensure_min_partitions,
+    )
 
+    par = spark.sparkContext.defaultParallelism
     p = str(tmp_path / "one_rg.parquet")
     tbl = pa.table({"k": list(range(50_000)), "v": [1.0] * 50_000})
     pq.write_table(tbl, p)  # one row group
-    assert tables._row_group_count(p)[0] == 1
+    p2 = str(tmp_path / "many_rg.parquet")
+    pq.write_table(tbl, p2, row_group_size=max(1, 50_000 // (par + 1)))
+    assert _row_group_count([p], par) == 1
+    assert _row_group_count([p2], par) >= par
+    assert _row_group_count(["s3://bucket/x.parquet"], par) == -1
+    assert _row_group_count([], par) == -1
 
-    df = spark.read.parquet(p)
-    par = spark.sparkContext.defaultParallelism
-    old_floor = tables.PAR_FLOOR_MIN_BYTES
-    try:
-        tables.PAR_FLOOR_MIN_BYTES = 1
-        out = tables._scan_parallelism_floor(spark, df, p)
-        assert "Repartition" in out._jdf.queryExecution().logical().toString()
-        assert out.rdd.getNumPartitions() == par
-        # identical rows, order aside
-        assert sorted(r["k"] for r in out.collect()) == list(range(50_000))
+    # byte-range splits small enough that each file's scan reaches the
+    # target on its own
+    ns = spark.newSession()
+    ns.conf.set(
+        "spark.sql.files.maxPartitionBytes", str(os.path.getsize(p) // (2 * par))
+    )
+    df = ns.read.parquet(p)
+    assert df.rdd.getNumPartitions() >= par
+    out = ensure_min_partitions(df)
+    assert "Repartition" in out._jdf.queryExecution().logical().toString()
+    assert out.rdd.getNumPartitions() == par
+    assert sorted(r["k"] for r in out.collect()) == list(range(50_000))
 
-        # tiny file below the floor: untouched
-        tables.PAR_FLOOR_MIN_BYTES = 10**15
-        same = tables._scan_parallelism_floor(spark, df, p)
-        assert same is df
-
-        # multi-row-group file at/above parallelism: untouched
-        tables.PAR_FLOOR_MIN_BYTES = 1
-        p2 = str(tmp_path / "many_rg.parquet")
-        pq.write_table(tbl, p2, row_group_size=max(1, 50_000 // (par + 1)))
-        rg2 = tables._row_group_count(p2)[0]
-        assert rg2 >= par
-        df2 = spark.read.parquet(p2)
-        assert tables._scan_parallelism_floor(spark, df2, p2) is df2
-
-        # non-stat-able path: untouched (assume splittable at scale)
-        assert tables._row_group_count("s3://bucket/x.parquet") == (-1, 0)
-        assert (
-            tables._scan_parallelism_floor(
-                spark, df, "s3://bucket/x.parquet"
-            )
-            is df
-        )
-    finally:
-        tables.PAR_FLOOR_MIN_BYTES = old_floor
+    df2 = ns.read.parquet(p2)
+    assert df2.rdd.getNumPartitions() >= par
+    assert ensure_min_partitions(df2) is df2
